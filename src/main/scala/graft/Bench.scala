@@ -1,8 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main, built to be auditable round-over-round:
   *
   *  - queries run in **sorted name order** (a Scala Map's iteration
@@ -27,14 +25,9 @@ object Bench {
     val launchLoad = try Files.readString(Paths.get("/proc/loadavg"))
       .split(" ")(0).toDouble catch { case _: Throwable => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .withExtensions(new GraftExtensions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     graft.sources.Scratch.sweep() // reclaim stale sink-demo dirs
 
     def release(): Unit = {

@@ -33,9 +33,13 @@ object Dist {
     * optimization: the lake gates assert set equality 9 times per
     * board run — guide §1.2 "don't compute things you throw away").
     * Columns are matched by NAME; both frames must expose the same
-    * column set (same requirement unionByName enforces).
+    * column set, or the call throws — a stray column on either side is
+    * a caller bug, never silently projected away.
     */
   def multisetEqual(a: DataFrame, b: DataFrame): Boolean = {
+    require(a.columns.toSet == b.columns.toSet,
+      s"multisetEqual needs equal column sets: ${a.columns.mkString(",")} " +
+        s"vs ${b.columns.mkString(",")}")
     val cols = a.columns.toSeq
     a.withColumn("_sgn", lit(1))
       .unionByName(b.select(cols.map(col): _*).withColumn("_sgn", lit(-1)))

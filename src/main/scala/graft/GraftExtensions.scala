@@ -12,11 +12,9 @@ import graft.functions.{BloomBuildAgg, BloomMightContain, Fnv1a64,
   * `SELECT lang, hash_sample(text, 3) FROM docs GROUP BY lang`) and the
   * Column API share one codegen'd implementation.
   *
-  * Wire up with:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)
-  * // or spark.sql.extensions=graft.GraftExtensions
-  * }}}
+  * [[GraftSession.local]] installs it; an outside session wires it up
+  * with `builder.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB timeline for one registered query — the measurement tool
   * behind the r16 optimization round (guide §1: measure first). For a
@@ -25,13 +24,8 @@ object ProfileJobs {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .withExtensions(new GraftExtensions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     graft.sources.Scratch.sweep()
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]

@@ -114,13 +114,8 @@ object ScaleBench {
     // the artifact distinguishes launch contention from self-load.
     val launchLoad = try Files.readString(Paths.get("/proc/loadavg"))
       .split(" ")(0).toDouble catch { case _: Throwable => -1.0 }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .withExtensions(new GraftExtensions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     graft.sources.Scratch.sweep()
 
     def release(): Unit = {

@@ -27,19 +27,7 @@ object SparkEntry {
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     scala.collection.immutable.ListMap(
-      (unorderedQueries ++ inducedFault).toSeq.sortBy(_._1): _*)
-
-  /** Fault injection for the harness's OWN failure path: with
-    * GRAFT_INDUCE_THROW set, one extra registry entry throws on
-    * execution — used to demonstrate that Verify records a broken
-    * query as an explicit error marker (red row on the driver board)
-    * rather than silent absence (the r11 stream_dq_monitor escape).
-    * Unset (every real run), the registry is exactly SURVEY §2.
-    */
-  private def inducedFault: Map[String, (SparkSession, String) => DataFrame] =
-    if (!sys.env.contains("GRAFT_INDUCE_THROW")) Map.empty
-    else Map("zz_induced_throw" -> ((_, _) =>
-      sys.error("induced failure: GRAFT_INDUCE_THROW is set")))
+      unorderedQueries.toSeq.sortBy(_._1): _*)
 
   /** Bench-time registry: identical to [[queries]] except where a
     * gate's registered query carries an in-gate honesty assertion that

@@ -5,63 +5,24 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** All k minhash signature values in ONE pass over a document's gram
-  * hash array — `sig_j = min_g ((pmod(g, P) · a_j + b_j) mod P)`.
+/** The full LSH index row in one kernel: all k minhash signatures
+  * `sig_j = min_g ((pmod(g, P) · a_j + b_j) mod P)` in ONE pass over a
+  * document's gram hash array, folded straight into their BAND HASHES —
+  * `band_i = fnv1a64("s_lo,…,s_hi")` over the ","-joined decimal
+  * signatures of the band's rows, exactly the
+  * `fnv1a64(concat_ws(",", sig_lo..sig_hi))` column formulation.
   *
-  * Replaces the explode → shuffle → k-min-aggregation formulation: that
-  * path blows each document into one row per gram and carries k longs
-  * of partial state per doc through a hash aggregate, while this is a
-  * per-row kernel inside whole-stage codegen — no explode, no exchange,
-  * the signature stage costs a scan. Bit-identical values (same affine
-  * maps over the same positive-mod gram hashes), so the DuckDB oracle's
-  * unnest+MIN mirror keeps matching.
+  * A per-row kernel inside whole-stage codegen: no explode, no
+  * exchange. Banding happens inside the kernel because exposing the
+  * signature ARRAY and slicing it with k `element_at` projections
+  * re-evaluates the kernel once per projection after CollapseProject
+  * inlines it; here there is ONE evaluation per row, and the caller
+  * `posexplode`s the result — a Generate evaluates its child once.
+  * Values are bit-identical to the DuckDB oracle's unnest+MIN mirror.
   *
-  * Null/empty contract mirrors the aggregation path: an EMPTY gram
-  * array yields null (the explode formulation simply produced no group
-  * for such a doc — callers filter nulls before banding), and a null
+  * Null/empty contract: an EMPTY gram array yields null (such a doc
+  * has no signature — callers filter nulls before banding), and a null
   * element poisons the row to null rather than a wrong signature.
-  */
-case class MinhashSigs(child: Expression, a: Array[Long], b: Array[Long])
-    extends UnaryExpression {
-
-  require(a.length == b.length, "coefficient arrays must align")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(grams: Any): Any =
-    MinhashSigs.sigs(grams.asInstanceOf[ArrayData], a, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", a, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", b, "long[]")
-    nullSafeCodeGen(ctx, ev, g => {
-      val r = ctx.freshName("minhashSigs")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.MinhashSigs.sigs($g, $aRef, $bRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSigs =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sigs"
-}
-
-/** The full LSH index row in one kernel: minhash signatures folded
-  * straight into their BAND HASHES — `band_i = fnv1a64("s_lo,…,s_hi")`
-  * over the ","-joined decimal signatures of the band's rows, exactly
-  * the `fnv1a64(concat_ws(",", sig_lo..sig_hi))` column formulation.
-  *
-  * Exists because exposing the signature ARRAY and slicing it with k
-  * `element_at` projections re-evaluates the kernel once per projection
-  * after CollapseProject inlines it (measured 2×+ slower than the
-  * explode+agg path it was meant to beat). Banding inside the kernel
-  * keeps ONE evaluation per row, and the caller `posexplode`s the
-  * result — a Generate evaluates its child once.
   */
 case class MinhashBands(child: Expression, a: Array[Long], b: Array[Long],
     bands: Int) extends UnaryExpression {
@@ -97,12 +58,6 @@ case class MinhashBands(child: Expression, a: Array[Long], b: Array[Long],
 object MinhashSigs {
   /** 2^31 − 1, the Mersenne prime shared with the DuckDB oracle. */
   final val Prime = 2147483647L
-
-  /** Called from generated code. */
-  def sigs(g: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
-    val raw = sigArray(g, a, b)
-    if (raw == null) null else new GenericArrayData(raw)
-  }
 
   private def sigArray(g: ArrayData, a: Array[Long],
       b: Array[Long]): Array[Long] = {

@@ -236,120 +236,36 @@ object Dedup {
       (a, b)
     }
 
-  /** MinHash signatures: explode shingles → k min-aggregations in one
-    * groupBy (map-side combine carries k longs per doc per task; one
-    * shuffle total). k separate agg columns codegen larger but execute
-    * faster than any exploded-position alternative (measured 4-6x).
-    *
-    * Shingle hash is the native codegen'd `fnv1a64` (not xxhash64) so the
-    * DuckDB oracle can re-derive signatures bit-exactly.
-    */
-  def minhashSignatures(docs: DataFrame, n: Int, k: Int): DataFrame =
-    minhashSignaturesFromGrams(docs.select(col("doc_id"),
-      hashedNgrams(docs.sparkSession, normText(col("text")), n).as("grams")), k)
-
-  /** [[minhashSignatures]] from a precomputed (doc_id, grams) table of
-    * distinct gram FNV hashes — callers that also need the gram sets
-    * for exact verification ([[minhashLsh]], [[incrementalDedup]],
+  /** (doc_id, band_idx, band_hash) table — the LSH index artifact,
+    * from a precomputed (doc_id, grams) table of distinct gram FNV
+    * hashes: callers that also need the gram sets for exact
+    * verification ([[minhashLsh]], [[incrementalDedup]],
     * [[dedupRecallBounds]]) tokenize+hash ONCE and share the cached
-    * frame between signature and verify stages.
+    * frame between banding and verify stages. Band key = fnv1a64 of
+    * the comma-joined signature slice (not murmur3 `hash`): same
+    * compact bucket key, but oracle-reproducible.
     *
-    * Signatures come from the codegen'd
-    * [[graft.functions.MinhashSigs]] kernel: all k mins in one pass
-    * over the gram array, per row — no explode, no shuffle (the old
-    * explode → k-min-aggregation carried every (doc, gram) pair through
-    * an exchange). Values are bit-identical to the aggregation
-    * formulation and to the oracle's unnest+MIN CTEs.
+    * The whole index row (minhash signatures folded into band hashes)
+    * comes from the single-evaluation [[graft.functions.MinhashBands]]
+    * kernel — all k mins in one pass over the gram array, per row, no
+    * explode and no shuffle; values are bit-identical to the oracle's
+    * unnest+MIN CTEs. `posexplode` supplies (band_idx, band_hash) with
+    * one kernel run per document.
     */
-  def minhashSignaturesFromGrams(grams: DataFrame, k: Int): DataFrame = {
+  def bandedSignaturesFromGrams(grams: DataFrame, k: Int,
+      bands: Int): DataFrame = {
     val ab = perms(k)
-    val sigsExpr = graft.functions.MinhashSigs(
+    val bandsExpr = graft.functions.MinhashBands(
       org.apache.spark.sql.GraftDatasetFactory.expression(col("grams")),
-      ab.map(_._1).toArray, ab.map(_._2).toArray)
+      ab.map(_._1).toArray, ab.map(_._2).toArray, bands)
     grams
       .select(col("doc_id"),
-        org.apache.spark.sql.GraftDatasetFactory.column(sigsExpr).as("sigs"))
-      // empty gram array → null sigs: the explode formulation produced
-      // no group for such docs, so they must not reach banding either
-      .filter(col("sigs").isNotNull)
-      .select(col("doc_id") +:
-        (0 until k).map(i => element_at(col("sigs"), i + 1).as(s"sig_$i")): _*)
-  }
-
-  /** LSH candidate pairs + exact Jaccard verification.
-    * bands×rows must equal k. Candidates come from a self-join on
-    * (band_idx, band_hash); verification joins the precomputed shingle
-    * sets and filters on true Jaccard.
-    */
-  /** Defaults tuned so the S-curve midpoint sits BELOW the verify
-    * threshold: 8 bands of 8 rows put the midpoint at (1/2)^(1/8) ≈
-    * 0.917, giving candidate probability ≈ 0.9998 at the 0.95 verify
-    * threshold (vs ~0.69 for the old 2×16 banding, whose midpoint 0.958
-    * sat above the threshold and silently dropped ~31% of borderline
-    * true near-dups) while staying ≈ 0.07 at jaccard 0.7 — candidates
-    * stay linear and the exact-Jaccard verify absorbs the extras. The
-    * recall floor is asserted in-gate by `dedup_recall_bounds`.
-    */
-  /** (doc_id, band_idx, band_hash) table — the LSH index artifact. Band
-    * key = fnv1a64 of the comma-joined signature slice (not murmur3
-    * `hash`): same compact bucket key, but oracle-reproducible.
-    */
-  def bandedSignatures(docs: DataFrame, n: Int, k: Int, bands: Int): DataFrame =
-    bandedSignaturesFromGrams(docs.sparkSession,
-      docs.select(col("doc_id"),
-        hashedNgrams(docs.sparkSession, normText(col("text")), n).as("grams")),
-      k, bands)
-
-  /** [[bandedSignatures]] from a precomputed (doc_id, grams) table —
-    * see [[minhashSignaturesFromGrams]] for the sharing rationale. The
-    * whole index row (signatures folded into band hashes) comes from
-    * the single-evaluation [[graft.functions.MinhashBands]] kernel;
-    * `posexplode` supplies (band_idx, band_hash) with one kernel run
-    * per document.
-    */
-  def bandedSignaturesFromGrams(s: SparkSession, grams: DataFrame,
-      k: Int, bands: Int): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.minhash.aggBanding"))
-      aggBandedSignaturesFromGrams(s, grams, k, bands)
-    else {
-      val ab = perms(k)
-      val bandsExpr = graft.functions.MinhashBands(
-        org.apache.spark.sql.GraftDatasetFactory.expression(col("grams")),
-        ab.map(_._1).toArray, ab.map(_._2).toArray, bands)
-      grams
-        .select(col("doc_id"),
-          org.apache.spark.sql.GraftDatasetFactory.column(bandsExpr).as("bands"))
-        // empty gram array → null bands: the explode+agg formulation
-        // produced no group for such docs — they must not reach banding
-        .filter(col("bands").isNotNull)
-        .select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    }
-
-  /** The explode → k-min-aggregation banding formulation, kept for
-    * A/B measurement (`-Dgraft.minhash.aggBanding=true`). Identical
-    * values to the kernel path.
-    */
-  private def aggBandedSignaturesFromGrams(s: SparkSession, grams: DataFrame,
-      k: Int, bands: Int): DataFrame = {
-    val rows = k / bands
-    val sh = grams.select(col("doc_id"), explode(col("grams")).as("g"))
-      .withColumn("h", pmod(col("g"), lit(MinhashPrime)))
-    val aggs = perms(k).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(MinhashPrime))).as(s"sig_$i")
-    }
-    val sigs = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val banded = sigs.select(col("doc_id") +: (0 until bands).map { bIdx =>
-      graft.functions.Fingerprint.fnv1a64(s,
-        concat_ws(",", (bIdx * rows until (bIdx + 1) * rows)
-          .map(i => col(s"sig_$i")): _*))
-        .as(s"band_$bIdx")
-    }: _*)
-    banded.select(col("doc_id"),
-      explode(array((0 until bands).map(bIdx =>
-        struct(lit(bIdx).as("band_idx"), col(s"band_$bIdx").as("band_hash"))): _*))
-        .as("band"))
-      .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
+        org.apache.spark.sql.GraftDatasetFactory.column(bandsExpr).as("bands"))
+      // empty gram array → null bands: such a doc has no signature, so
+      // it must not reach banding
+      .filter(col("bands").isNotNull)
+      .select(col("doc_id"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
   }
 
   /** Raw band-collision pairs (pre-distinct: one row per shared band)
@@ -368,6 +284,20 @@ object Dedup {
   private def bandCandidates(exploded: DataFrame): DataFrame =
     bandCollisions(exploded).distinct()
 
+  /** LSH candidate pairs + exact Jaccard verification.
+    * bands×rows must equal k. Candidates come from a self-join on
+    * (band_idx, band_hash); verification joins the precomputed shingle
+    * sets and filters on true Jaccard.
+    *
+    * Defaults tuned so the S-curve midpoint sits BELOW the verify
+    * threshold: 8 bands of 8 rows put the midpoint at (1/2)^(1/8) ≈
+    * 0.917, giving candidate probability ≈ 0.9998 at the 0.95 verify
+    * threshold (vs ~0.69 for the old 2×16 banding, whose midpoint 0.958
+    * sat above the threshold and silently dropped ~31% of borderline
+    * true near-dups) while staying ≈ 0.07 at jaccard 0.7 — candidates
+    * stay linear and the exact-Jaccard verify absorbs the extras. The
+    * recall floor is asserted in-gate by `dedup_recall_bounds`.
+    */
   def minhashLsh(docs: DataFrame, n: Int = 1, k: Int = 64, bands: Int = 8,
       threshold: Double = 0.95): DataFrame = {
     // ONE tokenize+hash pass: the cached gram table feeds both the
@@ -381,7 +311,7 @@ object Dedup {
     val grams = docs.select(col("doc_id"),
       hashedNgrams(docs.sparkSession, normText(col("text")), n).as("grams"))
       .repartition(col("doc_id"))
-    val exploded = bandedSignaturesFromGrams(docs.sparkSession, grams, k, bands)
+    val exploded = bandedSignaturesFromGrams(grams, k, bands)
     graft.Caching.withCached(grams, exploded) {
       val cands = bandCandidates(exploded)
       cands
@@ -398,7 +328,7 @@ object Dedup {
   // =========================================================================
   /** Daily-ingest dedup shape: a NEW batch of documents is deduped
     * against the existing corpus WITHOUT re-pairing the corpus with
-    * itself. The corpus's band table ([[bandedSignatures]]) is the
+    * itself. The corpus's band table ([[bandedSignaturesFromGrams]]) is the
     * stored index artifact; only batch-vs-index and batch-vs-earlier-
     * batch candidates are generated, so per-ingest cost is
     * O(batch + collisions), never O(corpus²) — the property that makes
@@ -421,7 +351,7 @@ object Dedup {
     val grams = docs.select(col("doc_id"),
       hashedNgrams(s, normText(col("text")), n).as("grams"))
       .repartition(col("doc_id"))
-    val bandTable = bandedSignaturesFromGrams(s, grams, k, bands)
+    val bandTable = bandedSignaturesFromGrams(grams, k, bands)
       .join(buckets, Seq("doc_id"))
     // buckets is read twice (inside bandTable and for the final batch
     // membership) — cache it, or the corpus is re-hashed per use
@@ -755,7 +685,7 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"))
       val truthNg = truthAll.select(col("doc_a"), col("doc_b"))
       val collMh = bandCollisions(
-        bandedSignaturesFromGrams(spark, mhBase, 64, 8))
+        bandedSignaturesFromGrams(mhBase, 64, 8))
       val collNg = ngramPairsFromBase(mhBase, 0.8)
         .select(col("doc_a"), col("doc_b"))
       // embedding truth: sampled-COMPLETE — every ≥0.35 pair touching a

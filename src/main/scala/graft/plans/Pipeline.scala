@@ -12,7 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.operators.{Cdc, Gold, Medallion}
-import graft.sources.LakeWriter
 
 /** Declarative pipeline DAG — the engine analogue of the reference's
   * DLT pipeline (tables declare dependencies, the runtime orders and

@@ -39,10 +39,6 @@ object CatalogSetup {
   val Prod: CatalogEnv = CatalogEnv("prod")
   val Dev: CatalogEnv = CatalogEnv("dev")
 
-  // back-compat aliases for the default (prod) layout
-  val BronzeDb: String = Prod.db("bronze")
-  val LayerDbs: Seq[String] = Prod.layerDbs
-
   /** The events feed is NOT registered: its TIMESTAMP(NANOS) column
     * needs the ns→µs read convention applied by [[graft.Tables.events]],
     * and that loader must stay the single home of the parity rule.

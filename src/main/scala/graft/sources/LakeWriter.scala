@@ -32,13 +32,14 @@ object LakeWriter {
     */
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String], clusterCols: Seq[String] = Nil): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val repart = df.repartition(partitionCols.map(col): _*)
     val clustered =
       if (clusterCols.isEmpty) repart
       else repart.sortWithinPartitions(clusterCols.map(col): _*)
+    // per-write option, not the session conf: a session-wide setting
+    // would silently turn every later partitioned overwrite dynamic
     clustered.write
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .mode(SaveMode.Overwrite)
       .parquet(path)

@@ -177,35 +177,14 @@ object EventStreams {
       }
   }
 
-  /** Flush helper for bounded fixtures: emit still-open sessions. */
-  def openSessions(events: Dataset[Ev]): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id).flatMapGroups { (userId, evs) =>
-      val sorted = evs.toSeq.sortBy(e => (e.ts, e.event_id))
-      var out = List.empty[SessionOut]
-      var cur = List.empty[Ev]
-      var idx = 0L
-      def close(): Unit = if (cur.nonEmpty) {
-        idx += 1
-        val s = cur.reverse
-        out ::= SessionOut(userId, idx, s.head.event_id, s.last.event_id,
-          s.size.toLong, (s.last.ts - s.head.ts).toDouble / 1.0e6)
-      }
-      sorted.foreach { e =>
-        if (cur.nonEmpty && e.ts - cur.head.ts > SessionGapUs) close()
-        cur = e :: cur
-      }
-      close()
-      out.reverseIterator
-    }
-  }
-
   /** Streaming AUTO CDC SCD1: per-microbatch MERGE into the lake table —
     * the engine analogue of `CREATE FLOW … AS AUTO CDC INTO target …
     * STORED AS SCD TYPE 1` (ref cdc_customers_silver.sql:55-66). Each
-    * batch resolves its own keys (window) then upserts, so the table
-    * converges to the same state as the batch SCD1 regardless of how
-    * the feed is chopped into batches.
+    * batch goes straight into [[graft.sources.LakeWriter.upsert]], whose
+    * one per-key window (sequence descending, updates winning ties)
+    * resolves the batch's own changes and the table's rows together, so
+    * the table converges to the same state as the batch SCD1 regardless
+    * of how the feed is chopped into batches.
     *
     * @param feed streaming frame with key/seq/op columns
     */
@@ -216,16 +195,11 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // resolve within the batch first (latest per key), keep DELETE
-        // markers so the upsert can drop those keys
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
-        val resolved = batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .withColumn("_deleted", col(opCol) === "DELETE")
-          .drop(opCol)
-        graft.sources.LakeWriter.upsert(spark, path, resolved, keys, seqCol)
+        // DELETE rows ride along as tombstone markers; the upsert's own
+        // per-key window picks the latest change across batch and table
+        graft.sources.LakeWriter.upsert(batch.sparkSession, path,
+          batch.withColumn("_deleted", col(opCol) === "DELETE").drop(opCol),
+          keys, seqCol)
         ()
       }
       .start()
@@ -411,18 +385,9 @@ object EventStreams {
     // changes across batches, exercising the out-of-order path
     val staged = graft.operators.Cdc.stage(Tables.events(spark, dir))
     staged.repartition(4).write.parquet(feed)
-    val q = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", 1).parquet(feed)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.LakeWriter.upsert(spark, table,
-          batch.withColumn("_deleted", col("operation") === "DELETE")
-            .drop("operation"),
-          keyCols = Seq("key_id"), seqCol = "sequence_number")
-        ()
-      }
-      .start()
+    val q = streamingScd1(spark.readStream.schema(staged.schema)
+        .option("maxFilesPerTrigger", 1).parquet(feed),
+      table, Seq("key_id"), "sequence_number", "operation", checkpoint)
     try q.processAllAvailable() finally q.stop()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(checkpoint))
     graft.sources.LakeWriter.read(spark, table)

@@ -76,6 +76,13 @@ class DistSpec extends AnyFunSuite {
     assert(!Dist.multisetEqual(a, c) && !Dist.multisetEqual(c, a))
   }
 
+  test("multisetEqual rejects frames whose column sets differ") {
+    val a = Seq((1, "x")).toDF("n", "s")
+    val b = Seq((1, "x", 0)).toDF("n", "s", "stray")
+    intercept[IllegalArgumentException](Dist.multisetEqual(a, b))
+    intercept[IllegalArgumentException](Dist.multisetEqual(b, a))
+  }
+
   test("hitsAndTotal == intersect().count() + truth.count()") {
     val out = Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("p", "n")
     val truth = Seq((1L, 10L), (2L, 10L), (2L, 12L)).toDF("p", "n")

@@ -26,6 +26,23 @@ class LakeSpec extends AnyFunSuite {
     assert(back.filter(col("d") === "2024-01-02").head().getAs[Double]("v") == 99.0)
   }
 
+  test("partitioned write leaves the session's overwrite mode alone") {
+    // own session: the shared one may carry state from earlier suites
+    val s2 = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = s2.conf.get(key)
+    val base = Files.createTempDirectory("graft_lake").toString
+    val df = s2.createDataFrame(Seq((1, "a"), (2, "b"))).toDF("id", "p")
+    LakeWriter.writePartitioned(df, s"$base/t", Seq("p"))
+    assert(s2.conf.get(key) == before)
+    // a later plain partitioned overwrite in the same session stays
+    // static: it replaces the whole table, not just the touched partition
+    df.write.partitionBy("p").mode("overwrite").parquet(s"$base/u")
+    df.filter(col("p") === "a").write.partitionBy("p").mode("overwrite")
+      .parquet(s"$base/u")
+    assert(s2.read.parquet(s"$base/u").count() == 1)
+  }
+
   test("upsert merges by key with last-writer-wins and delete support") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lake").toString + "/t2"

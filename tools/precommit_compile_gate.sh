@@ -27,6 +27,20 @@ if ! sbt -batch Test/compile > /tmp/graft_compile_gate.log 2>&1; then
 fi
 echo "[compile-gate] OK"
 
+# The benchmark (perfbench/, its own sbt build over this one) calls the
+# engine's public API — GraftSession.local, Caching.releaseAll,
+# LakeWriter.read, Scd2Apply, EventStreams.streamingScd1, VersionedLake.
+# A change under src/main/ must keep it compiling too.
+if git diff --cached --name-only | grep -q '^src/main/'; then
+  echo "[compile-gate] staged src/main/ changes — compiling perfbench ..."
+  if ! (cd perfbench && sbt --batch compile) > /tmp/graft_compile_gate_perfbench.log 2>&1; then
+    tail -40 /tmp/graft_compile_gate_perfbench.log
+    echo "[compile-gate] perfbench FAILED — commit refused. Full log: /tmp/graft_compile_gate_perfbench.log"
+    exit 1
+  fi
+  echo "[compile-gate] perfbench OK"
+fi
+
 # All-queries smoke (CoreSpec at sf0.001, ~3 min): compiling is not
 # verifying — r11's snapshot shipped a runtime-broken operator and a
 # red suite through the compile-only gate. Skip for INTERMEDIATE
