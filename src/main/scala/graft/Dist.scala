@@ -55,13 +55,18 @@ object Dist {
     * exact-truth subtree (r17; guide §1.2). Equivalent by
     * construction: the left join flags which truth rows appear in
     * `out`, countDistinct dedups exactly as intersect does, count(*)
-    * is the raw truth cardinality. Columns matched by name.
+    * is the raw truth cardinality. Columns matched by name, NULL-safe
+    * (`<=>`) as intersect matches them: a NULL in a compared column
+    * still counts as a hit.
     */
   def hitsAndTotal(out: DataFrame, truth: DataFrame): (Long, Long) = {
     val cols = truth.columns.toSeq
-    val r = truth.join(
-        out.select(cols.map(col): _*).distinct().withColumn("_h", lit(1)),
-        cols, "left")
+    val outCols = cols.indices.map(i => s"_hat_out$i")
+    val hits = out.select(cols.zip(outCols).map { case (c, o) =>
+        col(c).as(o) }: _*).distinct().withColumn("_h", lit(1))
+    val r = truth.join(hits,
+        cols.zip(outCols).map { case (c, o) => col(c) <=> col(o) }
+          .reduce(_ && _), "left")
       .agg(
         countDistinct(when(col("_h") === 1,
           struct(cols.map(col): _*))).as("hits"),

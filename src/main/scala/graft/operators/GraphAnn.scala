@@ -104,11 +104,18 @@ object GraphAnn {
     * "slower at 32 cores than 8" signature. Floor 8 keeps the build's
     * exact-cosine refinement parallel at gate scale; ~32 MB per
     * partition above it keeps 100 TB corpora at healthy task sizes.
+    * A plan with no size statistics (an RDD-backed frame) reports
+    * Spark's default-size sentinel, which says nothing about the
+    * corpus: it keeps the session's shuffle parallelism instead. The
+    * estimate is capped as a BigInt, so a join-multiplied size cannot
+    * wrap on the way to a Long.
     */
-  private def basePartsFor(emb: DataFrame): Int = {
+  private[graft] def basePartsFor(emb: DataFrame): Int = {
     val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = (bytes / BigInt(32L * 1024 * 1024)).toLong
-    math.max(8L, math.min(target, 200000L)).toInt
+    val conf = emb.sparkSession.sessionState.conf
+    if (bytes >= BigInt(conf.defaultSizeInBytes)) conf.numShufflePartitions
+    else (bytes / BigInt(32L * 1024 * 1024)).max(BigInt(8))
+      .min(BigInt(200000)).toInt
   }
 
   private def baseOf(emb: DataFrame): DataFrame =

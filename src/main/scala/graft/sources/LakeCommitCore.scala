@@ -194,6 +194,26 @@ trait LakeCommitCore { this: VersionedLake.type =>
     concat(element_at(parts, -2), lit("/"), element_at(parts, -1))
   }
 
+  /** The (file_rel, pos) rows of the given sidecars (table-relative),
+    * read with the one schema every sidecar is written with: parquet
+    * schema inference would cost a Spark job per read.
+    */
+  private[sources] def readDvSidecars(spark: SparkSession, path: String,
+      sidecars: Seq[String]): DataFrame =
+    spark.read.schema("file_rel STRING, pos LONG")
+      .parquet(sidecars.map(r => s"$path/$r"): _*)
+
+  /** The distinct values of one column of a change-scale frame, for a
+    * driver-side decision (touched buckets, affected files). Each
+    * partition de-duplicates its own values and the driver merges the
+    * sets: one job, no exchange, at most partitions × distinct values
+    * through the driver.
+    */
+  private[sources] def distinctValues[T](df: DataFrame, c: String,
+      enc: org.apache.spark.sql.Encoder[T]): Set[T] =
+    df.select(col(c)).as(enc).mapPartitions(_.toSet.iterator)(enc)
+      .collect().toSet
+
   /** Per-file min/max statistics for every NUMERIC column of freshly
     * adopted data files — the Delta/Iceberg data-skipping substrate,
     * carried as `stats\t<file>\t<col>:<lo>:<hi>|...` manifest lines.
@@ -434,8 +454,7 @@ trait LakeCommitCore { this: VersionedLake.type =>
         val mapping = m.dv.toSeq.map { case (file, sidecar) =>
           (file, new Path(s"$path/$sidecar").toUri.getPath)
         }.toDF("_m_file", "_sidecar")
-        val dvRows = spark.read.parquet(m.dv.values.toSeq.distinct
-            .map(r => s"$path/$r"): _*)
+        val dvRows = readDvSidecars(spark, path, m.dv.values.toSeq.distinct)
           .withColumn("_src", input_file_name())
         dvRows.join(broadcast(mapping),
             dvRows("file_rel") === mapping("_m_file") &&

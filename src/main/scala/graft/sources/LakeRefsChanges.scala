@@ -481,10 +481,9 @@ trait LakeRefsChanges { this: VersionedLake.type =>
         val visA = toLogicalDf(
           loadWithDv(spark, path, dvGrew, mA.dv, keepPos = true,
             widen = widenMap(mB)), mB)
-        val delsB = spark.read
-          .parquet(dvGrew.flatMap(mB.dv.get).distinct.map(r => s"$path/$r"): _*)
+        val delsB = readDvSidecars(spark, path,
+            dvGrew.flatMap(mB.dv.get).distinct)
           .select(col("file_rel").as("_rel"), col("pos").as("_pos"))
-          .distinct()
         Some(visA.join(delsB, Seq("_rel", "_pos"), "left_semi"))
       }).flatten
     val oldSide = oldParts

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import LakeModel._
@@ -59,7 +59,8 @@ trait LakeRowTracking { this: VersionedLake.type =>
     * — except across a tombstone: a delete RETIRES the id (Delta's
     * rule: a re-insert is a new row), so only live rows donate, while
     * a carried tombstone keeps its own id (stable across bucket
-    * rewrites, no allocation churn).
+    * rewrites, no allocation churn). Grouped by (gbucket, key), the
+    * merge window's grouping, so it rides the same exchange.
     */
   private[sources] def inheritRowIds(all: DataFrame,
       keyColsP: Seq[String]): DataFrame = {
@@ -67,7 +68,8 @@ trait LakeRowTracking { this: VersionedLake.type =>
       col("_row_id"))
     withNullRowId(all).withColumn("_row_id",
       coalesce(max(liveId).over(
-        Window.partitionBy(keyColsP.map(col): _*)), col("_row_id")))
+        Window.partitionBy((col("gbucket") +: keyColsP.map(col)): _*)),
+        col("_row_id")))
   }
 
   /** After resolution: rows with no inherited id (new keys) draw
@@ -164,6 +166,21 @@ trait LakeRowTracking { this: VersionedLake.type =>
     toLogicalDf(live.withColumnRenamed("_row_id", "row_id"), m)
   }
 
+  /** Phase 1 of an optimistic write: merge `updates` against the
+    * CURRENT snapshot and adopt the resulting bucket files under
+    * writer-unique immutable names. Nothing becomes visible — data
+    * files are dead weight until a manifest references them (crash or
+    * abort ⇒ orphans for [[vacuum]]). The returned [[PendingCommit]]
+    * records the snapshot read (`baseVersion`) and the buckets whose
+    * state the merge assumed (`touched`) — the facts conflict
+    * detection needs.
+    *
+    * One job collects the touched buckets; then the touched buckets'
+    * rows and the batch go through ONE bucket-keyed exchange, the
+    * per-key resolution runs inside it, and each bucket's rewrite
+    * lands as one file. The row-tracked path alone pays a second
+    * exchange, after its global fresh-id window.
+    */
   def prepare(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], seqCol: String,
       numBuckets: Int = 16): PendingCommit = {
@@ -202,8 +219,11 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val tagged = (if (tagged0.columns.contains("_deleted")) tagged0
       else tagged0.withColumn("_deleted", lit(false)))
       .withColumn("gbucket", pmod(hash(keyColsP.map(col): _*), lit(buckets)))
+    // gbucket is a function of the key, so (gbucket, key) groups as
+    // the key alone does — and the bucket-keyed exchange below already
+    // satisfies it, leaving the window no exchange of its own
     def resolve(all: DataFrame): DataFrame = {
-      val w = Window.partitionBy(keyColsP.map(col): _*)
+      val w = Window.partitionBy((col("gbucket") +: keyColsP.map(col)): _*)
         .orderBy(col(seqColP).desc, col("_is_update").desc)
       all.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1)
@@ -214,8 +234,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
     // the buckets this merge WRITES (and whose prior state it read —
     // for a first commit that state is "empty", which a concurrent
     // writer can still invalidate, so touched is computed regardless)
-    val touched: Set[Int] = tagged.select(col("gbucket")).distinct()
-      .collect().map(_.getInt(0)).toSet // ≤ numBuckets ints
+    val touched = distinctValues(tagged, "gbucket", Encoders.scalaInt)
     val replaced = prior.data.filter(rel => touched.contains(bucketOf(rel)))
     val existing =
       if (replaced.isEmpty) None
@@ -223,35 +242,33 @@ trait LakeRowTracking { this: VersionedLake.type =>
         widen = widenMap(prior))
         .withColumn("_is_update", lit(0)))
     val tracked = isTracked(prior)
-    val merged0 = existing match {
-      case None =>
-        resolve(if (tracked) withNullRowId(tagged) else tagged)
+    // ONE bucket-keyed exchange of the (change + touched-bucket)-scale
+    // rows: the merge window groups within it, and each bucket's
+    // rewrite lands as ONE file — file counts derive from the bucket
+    // layout, not from the core count (a key-hashed layout fans the
+    // partitionBy write out to tasks × buckets files)
+    val all = (existing match {
+      case None => if (tracked) withNullRowId(tagged) else tagged
       case Some(ex) =>
         val withDel = if (ex.columns.contains("_deleted")) ex
           else ex.withColumn("_deleted", lit(false))
-        val all = withDel.unionByName(tagged, allowMissingColumns = true)
-        // inherit ids pre-resolution: the winner keeps its key's id
-        resolve(if (tracked) inheritRowIds(all, keyColsP) else all)
-    }
+        withDel.unionByName(tagged, allowMissingColumns = true)
+    }).repartition(col("gbucket"))
+    // inherit ids pre-resolution: the winner keeps its key's id
+    val merged0 = resolve(
+      if (tracked && existing.nonEmpty) inheritRowIds(all, keyColsP) else all)
+    // the fresh-id ranking is one global window, which undoes the
+    // bucket layout: only the row-tracked path pays a second exchange
     val merged =
       if (tracked) assignFreshRowIds(merged0, keyColsP, rowIdHwm(prior))
+        .repartition(col("gbucket"))
       else merged0
     // stage new bucket files, then adopt them under immutable
     // writer-nonced names; staging never touches live data, and no two
     // writers can collide on a physical name
     val wid = nonce()
     val stage = path + s"_stage_$wid"
-    // r17 optimization (guide §2.4/§6): the merge window leaves `merged`
-    // hash-partitioned by KEY, so every task holds rows of every bucket
-    // and the partitionBy write fans out to (tasks × buckets) files —
-    // ProfileJobs measured a 4-commit, 10k-row table at 160 data files,
-    // with reads scheduling 100+ tasks and commit-time stats/adoption/
-    // changelog paying per file. One bucket-keyed exchange of the
-    // (change + touched-bucket)-scale batch makes each bucket's rewrite
-    // land as ONE file — file counts derive from the bucket layout, not
-    // from the core count, at any scale.
-    merged.repartition(col("gbucket"))
-      .write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
+    merged.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
     val adopted = adoptStaged(spark, path, stage, wid)
     // ourLines = the touched buckets' complete new representation: the
     // adopted files, no DV lines (the rewrite materialized deletes).
@@ -516,19 +533,26 @@ trait LakeRowTracking { this: VersionedLake.type =>
     * affected files' existing DV rows, one parquet under [[DvDir]].
     * Returns (sidecar rel, affected data files); None when `hits` is
     * empty. The sidecar is deleted-rows-scale — metadata, not data.
+    *
+    * The union needs no distinct. `hits` are positions of LIVE rows,
+    * which [[loadWithDv]] found by dropping every DV'd position, so no
+    * hit is already in a prior sidecar; and each prior sidecar is read
+    * only for the files its mapping names, so a stale row it keeps for
+    * a since-remapped file never comes along. One job collects the
+    * affected files and one writes the sidecar.
     */
   private[sources] def writeDvSidecar(spark: SparkSession, path: String,
       hits: DataFrame, m: TableManifest): Option[(String, Seq[String])] = {
     val f = fs(spark)
-    val affected = hits.select(col("file_rel")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq // metadata scale
+    val affected = distinctValues(hits, "file_rel", Encoders.STRING)
+      .toSeq.sorted // metadata scale
     if (affected.isEmpty) return None
-    val priorDv = affected.flatMap(m.dv.get).distinct
-    val merged =
-      if (priorDv.isEmpty) hits
-      else hits.unionByName(
-        spark.read.parquet(priorDv.map(r => s"$path/$r"): _*)
-          .filter(col("file_rel").isin(affected: _*))).distinct()
+    val priors = affected.filter(m.dv.contains).groupBy(m.dv).toSeq
+      .sortBy(_._1).map { case (sidecar, files) =>
+        readDvSidecars(spark, path, Seq(sidecar))
+          .filter(col("file_rel").isin(files: _*))
+      }
+    val merged = priors.foldLeft(hits)(_ unionByName _)
     val wid = nonce()
     val stage = path + s"_dvstage_$wid"
     merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
@@ -574,10 +598,9 @@ trait LakeRowTracking { this: VersionedLake.type =>
     // hold their rows — the position scan reads only those, so a
     // trickle delete against a 100 TB table scans the touched shards,
     // not the table (≤ numBuckets ints through the driver)
-    val keyBuckets = deleteKeysP
+    val keyBuckets = distinctValues(deleteKeysP
       .select(pmod(hash(keyColsP.map(col): _*),
-        lit(m.numBuckets(numBuckets))).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+        lit(m.numBuckets(numBuckets))).as("b")), "b", Encoders.scalaInt)
     val candidates = m.data.filter(rel => keyBuckets.contains(bucketOf(rel)))
     if (candidates.isEmpty) return CommitResult(base, 0)
     // the keys' CURRENT rows (already-deleted positions are excluded
@@ -720,10 +743,9 @@ trait LakeRowTracking { this: VersionedLake.type =>
           // rows live at v-1 whose position the new sidecar added
           val rows = loadWithDv(spark, path, grew, mPrev.dv,
             keepPos = true, widen = widenMap(m))
-          val newDels = spark.read
-            .parquet(grew.flatMap(m.dv.get).distinct.map(r => s"$path/$r"): _*)
+          val newDels = readDvSidecars(spark, path,
+              grew.flatMap(m.dv.get).distinct)
             .select(col("file_rel").as("_rel"), col("pos").as("_pos"))
-            .distinct()
           val doomed = rows.join(newDels, Seq("_rel", "_pos"), "left_semi")
           linkDeleteTombstones(spark, path, v,
             stageDeleteTombstones(spark, path, doomed))
@@ -745,8 +767,20 @@ trait LakeRowTracking { this: VersionedLake.type =>
     * — retained, sequence and all, so a late-arriving OLDER change for
     * a deleted key is rejected by the same comparison (the
     * anti-resurrection contract), and readers filter them. Stale
-    * changes are dropped. One snapshot scan finds the current rows of
-    * the touched keys; everything else is change-scale.
+    * changes are dropped.
+    *
+    * The batch is resolved against the table ONCE, with ONE exchange:
+    *  - the batch is bucket-partitioned and its per-key winner picked
+    *    inside that layout (gbucket is a function of the key);
+    *  - one snapshot scan of the touched buckets finds the keys'
+    *    current rows, and each winner is left-joined to its key's row
+    *    (`_cur_seq`, `_rel`, `_pos`, live `_row_id`) by broadcast, so
+    *    the bucket layout survives;
+    *  - the accepted rows are checkpointed once; the DV hits are their
+    *    current rows' positions, and the append lands one file per
+    *    touched bucket straight from that layout.
+    * Everything but the one scan is change-scale (the broadcasts carry
+    * the batch's keys and their current rows, never the table).
     */
   def dvUpsert(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], seqCol: String,
@@ -762,70 +796,63 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val updatesP = toPhysicalDf(applyGenerated(m, updatesE), m)
     val keyCols2 = keyCols.map(toPhysicalName(m, _))
     val seqCol2 = toPhysicalName(m, seqCol)
-    val tagged0 = updatesP
-    val tagged = (if (tagged0.columns.contains("_deleted")) tagged0
-      else tagged0.withColumn("_deleted", lit(false)))
+    val tagged = (if (updatesP.columns.contains("_deleted")) updatesP
+      else updatesP.withColumn("_deleted", lit(false)))
       .withColumn("gbucket", pmod(hash(keyCols2.map(col): _*),
         lit(m.numBuckets(numBuckets))))
-    // winner per key WITHIN the batch (same resolve as upsert)
-    val wInner = Window.partitionBy(keyCols2.map(col): _*)
+    // winner per key WITHIN the batch (same resolve as upsert), grouped
+    // inside the commit's one bucket-keyed exchange
+    val wInner = Window.partitionBy((col("gbucket") +: keyCols2.map(col)): _*)
       .orderBy(col(seqCol2).desc)
-    val newRows = tagged.withColumn("_rn", row_number().over(wInner))
+    val newRows = tagged.repartition(col("gbucket"))
+      .withColumn("_rn", row_number().over(wInner))
       .filter(col("_rn") === 1).drop("_rn")
       .localCheckpoint(true)
-    // current rows (tombstones INCLUDED — they carry the sequence that
-    // rejects late older changes) of the touched keys, with positions.
     // BUCKET PRUNING: only the changed keys' hash buckets can hold
-    // them — the scan reads those shards, never the whole table.
-    val keyBuckets = newRows.select(col("gbucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // their current rows — the scan reads those shards, never the table
+    val keyBuckets = distinctValues(newRows, "gbucket", Encoders.scalaInt)
     val candidates = m.data.filter(rel => keyBuckets.contains(bucketOf(rel)))
     val tracked = isTracked(m)
-    val current = (if (candidates.isEmpty)
-      // no bucket holds these keys yet: empty current, same shape
-      withNullRowId(newRows.filter(lit(false)))
-        .select((keyCols2.map(col) :+ col(seqCol2).as("_cur_seq") :+
-          lit(null).cast("string").as("_rel") :+
-          lit(null).cast("long").as("_pos") :+ col("_row_id")): _*)
-    else withNullRowId(loadWithDv(spark, path, candidates, m.dv,
-      keepPos = true, widen = widenMap(m)))
-      .join(newRows.select(keyCols2.map(col): _*).distinct(),
-        keyCols2, "left_semi")
-      .select((keyCols2.map(col) :+ col(seqCol2).as("_cur_seq") :+
-        col("_rel") :+ col("_pos") :+
-        // only a LIVE current row donates its id — an accepted write
-        // over a tombstone is a re-insert and draws fresh
-        when(!coalesce(col("_deleted"), lit(false)), col("_row_id"))
-          .as("_row_id")): _*))
-      .localCheckpoint(true) // one scan over touched shards only
-    // accept iff no current row, or new sequence wins (ties to the
-    // update — upsert's (seq DESC, _is_update DESC) order). When
-    // tracked, the superseded row version's id rides this same join,
-    // so the appended winner INHERITS the key's identity.
-    val accepted0 = newRows
-      .join(current.select(((keyCols2.map(col) :+ col("_cur_seq")) ++
-        (if (tracked) Seq(col("_row_id")) else Nil)): _*),
-        keyCols2, "left")
+    // current rows (tombstones INCLUDED — they carry the sequence that
+    // rejects late older changes) of the touched keys, with positions;
+    // when tracked, the superseded row's id rides along so the appended
+    // winner INHERITS the key's identity — but only a LIVE current row
+    // donates: an accepted write over a tombstone is a re-insert and
+    // draws fresh
+    val current =
+      if (candidates.isEmpty) None // no bucket holds these keys yet
+      else Some(withNullRowId(loadWithDv(spark, path, candidates, m.dv,
+          keepPos = true, widen = widenMap(m)))
+        .join(broadcast(newRows.select(keyCols2.map(col): _*)), keyCols2,
+          "left_semi")
+        .select((keyCols2.map(col) ++ Seq(col(seqCol2).as("_cur_seq"),
+          col("_rel"), col("_pos")) ++
+          (if (tracked) Seq(when(!coalesce(col("_deleted"), lit(false)),
+            col("_row_id")).as("_row_id")) else Nil)): _*))
+    // accept iff no current row, or the new sequence wins (ties to the
+    // update — upsert's (seq DESC, _is_update DESC) order)
+    val accepted = current.fold(newRows)(cur => newRows
+      .join(broadcast(cur), keyCols2, "left")
       .filter(col("_cur_seq").isNull || col(seqCol2) >= col("_cur_seq"))
-      .drop("_cur_seq")
-    val accepted =
-      if (tracked) assignFreshRowIds(accepted0, keyCols2, rowIdHwm(m))
-      else accepted0.localCheckpoint(true)
+      .localCheckpoint(true))
     // DV the superseded versions of accepted keys
-    val hits = current
-      .join(accepted.select(keyCols2.map(col): _*) , keyCols2, "left_semi")
-      .select(col("_rel").as("file_rel"), col("_pos").as("pos"))
-    val dvOut = writeDvSidecar(spark, path, hits, m)
-    // append the winners (deletes as tombstone rows) as NEW files —
-    // bucket-keyed exchange first, so a trickle append lands ONE file
-    // per touched bucket instead of (tasks × buckets) (r17, guide §6:
-    // MOR appends compound over commits, so per-append file count is
-    // the read path's long-run file count)
+    val dvOut = current.flatMap(_ => writeDvSidecar(spark, path,
+      accepted.filter(col("_rel").isNotNull)
+        .select(col("_rel").as("file_rel"), col("_pos").as("pos")), m))
+    // append the winners (deletes as tombstone rows) as NEW files, one
+    // per touched bucket: the rows are still in the bucket layout —
+    // except when tracked, where the fresh-id ranking's global window
+    // undoes it and one more exchange restores it (MOR appends compound
+    // over commits, so per-append file count is the read path's
+    // long-run file count)
+    val winners = accepted.drop("_cur_seq", "_rel", "_pos")
+    val out =
+      if (tracked) assignFreshRowIds(winners, keyCols2, rowIdHwm(m))
+        .repartition(col("gbucket"))
+      else winners
     val wid = nonce()
     val stage = path + s"_stage_$wid"
-    accepted.repartition(col("gbucket"))
-      .write.partitionBy("gbucket").mode(SaveMode.Overwrite)
-      .parquet(stage)
+    out.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
     val appended = adoptStaged(spark, path, stage, wid)
     if (dvOut.isEmpty && appended.isEmpty) return CommitResult(base, 0)
     val dvAffected = dvOut.map(_._2).getOrElse(Seq.empty)

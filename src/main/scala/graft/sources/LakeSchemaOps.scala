@@ -718,6 +718,18 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     }
   }
 
+  /** What parquet's footer merge makes of schemas that differ at most
+    * in top-level nullability: the same fields, nullable where any
+    * file's is. None when they differ in anything else.
+    */
+  private def nullableUnion(schemas: Seq[StructType]): Option[StructType] = {
+    val h = schemas.head
+    def shape(s: StructType) = s.fields.toSeq.map(_.copy(nullable = true))
+    if (!schemas.forall(s => shape(s) == shape(h))) None
+    else Some(StructType(h.fields.indices.map(i =>
+      h.fields(i).copy(nullable = schemas.exists(_.fields(i).nullable)))))
+  }
+
   private[sources] def loadWithDv(spark: SparkSession, path: String,
       dataFiles: Seq[String], dv: Map[String, String],
       keepPos: Boolean = false,
@@ -734,13 +746,16 @@ trait LakeSchemaOps { this: VersionedLake.type =>
         // the cached footer schema (+ the gbucket partition directory
         // column, appended last exactly where partition discovery puts
         // it) and skip the per-read footer-merge Spark job outright.
-        // Heterogeneous filesets (post-evolution snapshots) keep the
-        // exact mergeSchema semantics they had before.
-        val schemas = files.map(r => FooterSchemas.of(spark, s"$path/$r"))
-        if (schemas.distinct.size == 1)
-          rdr0.schema(StructType(schemas.head.fields :+
+        // Files that differ only in a column's nullability get the
+        // schema that merge would give them; heterogeneous filesets
+        // (post-evolution snapshots) keep the exact mergeSchema
+        // semantics they had before.
+        nullableUnion(files.map(r => FooterSchemas.of(spark, s"$path/$r"))
+            .distinct) match {
+          case Some(s) => rdr0.schema(StructType(s.fields :+
             StructField("gbucket", IntegerType, nullable = true)))
-        else rdr0.option("mergeSchema", "true")
+          case None => rdr0.option("mergeSchema", "true")
+        }
       }
         else rdr0.schema(widenedReadSchema(spark, path, files, widen))
       rdr.parquet(files.map(r => s"$path/$r"): _*)
@@ -752,10 +767,10 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     val dirtyDf =
       if (dirty.isEmpty) None
       else {
-        val dvFiles = dirty.flatMap(dv.get).distinct
-        val dels = spark.read.parquet(dvFiles.map(r => s"$path/$r"): _*)
+        // duplicate positions (a stale row of a since-remapped file)
+        // cannot change a left-anti result, so no distinct
+        val dels = readDvSidecars(spark, path, dirty.flatMap(dv.get).distinct)
           .select(col("file_rel").as("_rel"), col("pos").as("_pos"))
-          .distinct()
         Some(scan(dirty).join(dels, Seq("_rel", "_pos"), "left_anti"))
       }
     val alive = (cleanDf, dirtyDf) match {
@@ -888,13 +903,4 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     }
   }
 
-  /** Phase 1 of an optimistic write: merge `updates` against the
-    * CURRENT snapshot and adopt the resulting bucket files under
-    * writer-unique immutable names. Nothing becomes visible — data
-    * files are dead weight until a manifest references them (crash or
-    * abort ⇒ orphans for [[vacuum]]). The returned [[PendingCommit]]
-    * records the snapshot read (`baseVersion`) and the buckets whose
-    * state the merge assumed (`touched`) — the facts conflict
-    * detection needs.
-    */
 }

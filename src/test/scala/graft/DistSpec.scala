@@ -91,6 +91,16 @@ class DistSpec extends AnyFunSuite {
     assert(h == 2L && t == 3L)
   }
 
+  test("hitsAndTotal matches NULL-keyed rows as intersect does") {
+    val out = Seq((Some(1L), 10L), (None, 11L), (Some(3L), 13L))
+      .toDF("p", "n")
+    val truth = Seq((Some(1L), 10L), (None, 11L), (Some(2L), 12L))
+      .toDF("p", "n")
+    val (h, t) = Dist.hitsAndTotal(out, truth)
+    assert(h == out.intersect(truth).count() && t == truth.count())
+    assert(h == 2L && t == 3L)
+  }
+
   test("lake fresh-id allocation is threshold-independent") {
     // the adaptive switch in assignFreshRowIds is pure cost policy:
     // drive one upsert through each branch and prove the SAME ids land

@@ -29,6 +29,18 @@ class GraphAnnSpec extends AnyFunSuite {
       "no node exceeds knn degree — long links missing")
   }
 
+  test("cached-corpus partitions: by bytes, core count without stats") {
+    // file-backed: sized from the optimizer's byte estimate, floor 8
+    val fromFiles = GraphAnn.basePartsFor(emb)
+    assert(fromFiles >= 8 && fromFiles <= 200000, s"file corpus: $fromFiles")
+    // RDD-backed: the estimate is Spark's default-size sentinel, which
+    // must not pin the corpus at the 200k-partition cap
+    val fromRdd = GraphAnn.basePartsFor(
+      spark.createDataFrame(emb.rdd, emb.schema))
+    assert(fromRdd == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"RDD corpus: $fromRdd partitions")
+  }
+
   test("distributed id-rank equals the global row_number exactly") {
     val base = emb.select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))

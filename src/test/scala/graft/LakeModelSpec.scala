@@ -16,6 +16,9 @@ import graft.sources.VersionedLake
   * with their sequence (anti-resurrection), DV position deletes
   * remove the row without a tombstone (any later write re-inserts),
   * restore replaces content with the target version's by reference.
+  * Batches may change one key twice at distinct sequences, so both
+  * write paths' within-batch resolution is checked too; the 4-bucket
+  * seed spreads a batch over more buckets than it has keys in some.
   */
 class LakeModelSpec extends AnyFunSuite {
   import TestSpark._
@@ -24,7 +27,7 @@ class LakeModelSpec extends AnyFunSuite {
   private case class Entry(value: Double, seq: Long, deleted: Boolean)
 
   test("random op sequences match the reference model at every version") {
-    for (seed <- Seq(11, 23)) {
+    for ((seed, buckets) <- Seq((11, 2), (23, 2), (37, 4))) {
       val rnd = new scala.util.Random(seed)
       val path = graft.sources.Scratch.dir(s"vlake_model_$seed")
       var state = Map.empty[Long, Entry]           // tombstones retained
@@ -34,10 +37,20 @@ class LakeModelSpec extends AnyFunSuite {
 
       def batch(): Seq[(Long, Double, Long, Boolean)] = {
         val keys = rnd.shuffle((0L until 12L).toList).take(1 + rnd.nextInt(5))
-        keys.map { k =>
+        val rows = keys.map { k =>
           // occasional non-advancing sequence: exercises update-wins-tie
           seqCtr += (if (rnd.nextInt(4) == 0) 0 else 1)
           (k, rnd.nextInt(10000) / 100.0, seqCtr, rnd.nextInt(5) == 0)
+        }
+        // every other batch changes one key again at a fresh sequence,
+        // placed anywhere in the batch: the higher sequence must win
+        // whichever row comes first
+        if (rnd.nextBoolean()) rows
+        else {
+          seqCtr += 1
+          val again = (rows(rnd.nextInt(rows.size))._1,
+            rnd.nextInt(10000) / 100.0, seqCtr, rnd.nextInt(5) == 0)
+          rnd.shuffle(again :: rows)
         }
       }
       def applyModel(b: Seq[(Long, Double, Long, Boolean)]): Unit =
@@ -63,7 +76,8 @@ class LakeModelSpec extends AnyFunSuite {
 
       val b0 = batch().map(t => (t._1, t._2, t._3, false))
       VersionedLake.upsert(spark, path,
-        b0.toDF("k", "v", "seq", "_deleted"), Seq("k"), "seq", numBuckets = 2)
+        b0.toDF("k", "v", "seq", "_deleted"), Seq("k"), "seq",
+        numBuckets = buckets)
       applyModel(b0)
       snaps += 1 -> state
       check()
@@ -74,13 +88,13 @@ class LakeModelSpec extends AnyFunSuite {
             val b = batch()
             VersionedLake.upsert(spark, path,
               b.toDF("k", "v", "seq", "_deleted"), Seq("k"), "seq",
-              numBuckets = 2)
+              numBuckets = buckets)
             applyModel(b)
           case 2 | 3 =>
             val b = batch()
             VersionedLake.dvUpsert(spark, path,
               b.toDF("k", "v", "seq", "_deleted"), Seq("k"), "seq",
-              numBuckets = 2)
+              numBuckets = buckets)
             applyModel(b)
           case 4 =>
             val vis = visible(state).keys.toSeq.sorted

@@ -5,7 +5,7 @@ set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 MAIN=${3:-graft.Verify}
-cd /root/repo
+cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
