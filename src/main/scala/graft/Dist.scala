@@ -23,6 +23,17 @@ import org.apache.spark.sql.functions._
   */
 object Dist {
 
+  /** A column-name prefix no column of `cols` starts with (Spark
+    * resolves names case-insensitively, so neither may a differently
+    * cased one): helper columns named `<prefix><anything>` can never
+    * replace or shadow an input column.
+    */
+  private def freshPrefix(cols: Seq[String]): String = {
+    val lower = cols.map(_.toLowerCase(java.util.Locale.ROOT))
+    Iterator.from(0).map(i => s"_dist$i")
+      .find(p => !lower.exists(_.startsWith(p))).get
+  }
+
   /** Multiset equality of two same-schema frames in ONE Spark job —
     * the signed-multiset trick the manifest-delta gate pioneered
     * (LakeGatesOps `travelExact`): union with ±1 signs, group by every
@@ -41,11 +52,13 @@ object Dist {
       s"multisetEqual needs equal column sets: ${a.columns.mkString(",")} " +
         s"vs ${b.columns.mkString(",")}")
     val cols = a.columns.toSeq
-    a.withColumn("_sgn", lit(1))
-      .unionByName(b.select(cols.map(col): _*).withColumn("_sgn", lit(-1)))
+    val p = freshPrefix(cols)
+    val (sgn, d) = (s"${p}_sgn", s"${p}_d")
+    a.withColumn(sgn, lit(1))
+      .unionByName(b.select(cols.map(col): _*).withColumn(sgn, lit(-1)))
       .groupBy(cols.map(col): _*)
-      .agg(sum(col("_sgn")).as("_d"))
-      .filter(col("_d") =!= 0)
+      .agg(sum(col(sgn)).as(d))
+      .filter(col(d) =!= 0)
       .isEmpty
   }
 
@@ -61,14 +74,16 @@ object Dist {
     */
   def hitsAndTotal(out: DataFrame, truth: DataFrame): (Long, Long) = {
     val cols = truth.columns.toSeq
-    val outCols = cols.indices.map(i => s"_hat_out$i")
+    val p = freshPrefix(cols)
+    val outCols = cols.indices.map(i => s"${p}_out$i")
+    val h = s"${p}_h"
     val hits = out.select(cols.zip(outCols).map { case (c, o) =>
-        col(c).as(o) }: _*).distinct().withColumn("_h", lit(1))
+        col(c).as(o) }: _*).distinct().withColumn(h, lit(1))
     val r = truth.join(hits,
         cols.zip(outCols).map { case (c, o) => col(c) <=> col(o) }
           .reduce(_ && _), "left")
       .agg(
-        countDistinct(when(col("_h") === 1,
+        countDistinct(when(col(h) === 1,
           struct(cols.map(col): _*))).as("hits"),
         count(lit(1)).as("total")).head()
     (r.getLong(0), r.getLong(1))
@@ -134,11 +149,16 @@ object Dist {
     * partition sums (`parts` decimals through the driver). Exact for
     * DECIMAL values (the offsets ride as BigDecimal literals); the cum
     * column is cast to `sum(value)`'s own window result type so both
-    * forms are type- and bit-identical (DistSpec pins it).
+    * forms are type- and bit-identical (DistSpec pins it). DECIMAL
+    * only: any other value type is refused up front.
     */
   def globalRunningSum(df: DataFrame, order: Seq[Column],
       value: org.apache.spark.sql.Column, parts: Int, rankOut: String,
       cumOut: String, totalOut: String): DataFrame = {
+    val valueType = df.select(value).schema.head.dataType
+    require(valueType.isInstanceOf[org.apache.spark.sql.types.DecimalType],
+      s"globalRunningSum sums DECIMAL values only; got " +
+        s"${valueType.simpleString} — cast the value to a DECIMAL first")
     val p = df.repartitionByRange(parts, order: _*)
       .withColumn("_grs_pid", spark_partition_id())
       .withColumn("_grs_v", value)

@@ -86,6 +86,182 @@ trait LakeCommitCore { this: VersionedLake.type =>
   private[sources] def nonce(): String =
     java.util.UUID.randomUUID().toString.substring(0, 8)
 
+  // ---- the commit protocol ---------------------------------------------------
+  //
+  // Every lake commit lands through one of two loops over [[casCommit]]:
+  // [[commitPending]] for staged data written against a base snapshot,
+  // [[commitManifest]] for commits derived from the tip alone. Only the
+  // single-shot commits (a fast-forward, a clone's v1) CAS directly.
+
+  /** CAS rounds either commit loop tries before it gives up. */
+  private[sources] val MaxCommitRounds = 10
+
+  /** Create `dst` holding `lines` iff no file exists there yet — the
+    * compare-and-swap every lake and transaction-group commit
+    * publishes with. The content goes to a writer-private temp file
+    * first, then is PUBLISHED with an operation that atomically fails
+    * if `dst` exists; the losing temp is removed, so a lost race
+    * leaves no litter.
+    *
+    * Publish primitive by filesystem: on local files, `link(2)` via
+    * `Files.createLink` — POSIX guarantees EEXIST atomically, and the
+    * link exposes the COMPLETE temp content in one step (a plain
+    * `rename(2)` would silently REPLACE an existing file — exactly the
+    * lost-update race this exists to close). On HDFS-like stores,
+    * `rename` itself refuses an existing destination atomically, so it
+    * is the CAS.
+    */
+  private[sources] def createIfAbsent(spark: SparkSession, dst: Path,
+      lines: Seq[String]): Boolean = {
+    val f = fs(spark)
+    f.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent,
+      s".${dst.getName.stripSuffix(".txt")}-${nonce()}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    if (f.getUri.getScheme == "file") {
+      try {
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
+        f.delete(tmp, false)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          f.delete(tmp, false); false
+      }
+    } else {
+      // HDFS rename is atomic and refuses an existing destination
+      if (f.exists(dst)) { f.delete(tmp, false); false }
+      else {
+        val won = f.rename(tmp, dst)
+        if (!won) f.delete(tmp, false)
+        won
+      }
+    }
+  }
+
+  /** Choose the physical encoding for a manifest about to land as
+    * `version`: a delta against the parent slot when that is smaller,
+    * a full snapshot on checkpoint versions, for v1, when the parent is
+    * unreadable, or when line multiplicity would make set-diff lossy.
+    */
+  private[sources] def encodeManifest(spark: SparkSession, path: String,
+      version: Int, sorted: Seq[String]): Seq[String] = {
+    if (version <= 1 || version % ManifestCheckpointInterval == 0)
+      return sorted
+    scala.util.Try(manifestLines(spark, path, version - 1)).toOption match {
+      case None => sorted
+      case Some(parent) =>
+        val pSet = parent.toSet
+        val cSet = sorted.toSet
+        if (pSet.size != parent.length || cSet.size != sorted.length) sorted
+        else {
+          val removed = parent.filterNot(cSet)
+          val added = sorted.filterNot(pSet)
+          val delta = s"$DeltaHeaderPrefix${version - 1}" +:
+            (removed.map("-\t" + _) ++ added.map("+\t" + _))
+          if (delta.length < sorted.length) delta else sorted
+        }
+    }
+  }
+
+  /** Compare-and-swap commit of the full manifest `files` at `version`
+    * — Delta-style optimistic concurrency, where the version slot is
+    * the lock. Stamps the commit time, encodes the manifest
+    * ([[encodeManifest]]) and publishes it with [[createIfAbsent]].
+    * Returns false when another writer owns the version (the caller
+    * rebases, re-derives or aborts).
+    */
+  private[sources] def casCommit(spark: SparkSession, path: String, version: Int,
+      files: Seq[String]): Boolean =
+    // central commit-time stamp: every commit path flows through here
+    createIfAbsent(spark, manifestPath(path, version),
+      encodeManifest(spark, path, version,
+        (files.filterNot(_.startsWith("meta\tts\t")) :+
+          s"meta\tts\t${clockFor(path)}").sorted))
+
+  /** The commit loop for changes DERIVED FROM THE TIP ALONE — a tag, a
+    * constraint or expectation, a column-mapping change, a restore, a
+    * property stamp. Each round reads the tip manifest, runs `edit` on
+    * it and CASes the result, with `meta op <op>`, as the next
+    * version. `edit` re-derives the change from that tip and its
+    * `require`s re-validate against it, so a lost round never
+    * overwrites what the winner committed: it starts over on the new
+    * tip, where a now-invalid change (a tag or constraint name the
+    * winner took) fails. There is no staged data to rebase and no
+    * bucket to conflict on; staged data goes through [[commitPending]].
+    * Gives up after [[MaxCommitRounds]] lost rounds.
+    */
+  private[sources] def commitManifest(spark: SparkSession, path: String,
+      op: String)(edit: TableManifest => TableManifest): CommitResult = {
+    var rounds = 0
+    while (rounds <= MaxCommitRounds) {
+      val vs = versions(spark, path)
+      require(vs.nonEmpty, s"no committed versions at $path")
+      val tip = vs.last
+      val lines = edit(manifestEntries(spark, path, tip)).lines :+
+        s"meta\top\t$op"
+      if (casCommit(spark, path, tip + 1, lines))
+        return CommitResult(tip + 1, rounds)
+      rounds += 1
+    }
+    throw new java.io.IOException(
+      s"gave up committing $op at $path after $MaxCommitRounds CAS rounds")
+  }
+
+  /** Reference the immutable file `src` at `dst` without copying its
+    * bytes where the store allows: a HARD LINK on local files (the
+    * inode is shared, so `dst` outlives a vacuum of `src`); object
+    * stores have no links, so they fall back to a copy. The parent of
+    * `dst` must exist.
+    */
+  private[sources] def linkOrCopy(spark: SparkSession, src: Path,
+      dst: Path): Unit = {
+    val f = fs(spark)
+    if (f.getUri.getScheme == "file")
+      java.nio.file.Files.createLink(
+        java.nio.file.Paths.get(dst.toUri.getPath),
+        java.nio.file.Paths.get(src.toUri.getPath))
+    else
+      org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false,
+        spark.sparkContext.hadoopConfiguration)
+  }
+
+  /** Write `df` (which carries `gbucket`) partitioned by bucket into a
+    * writer-private staging directory beside the table, then adopt
+    * every staged file under an immutable writer-nonced name
+    * (`gbucket=N/w<nonce>-<i>.parquet`); returns the adopted relative
+    * paths. Staging never touches live data, no two writers can
+    * collide on a physical name, and a write that throws leaves no
+    * staging directory behind. Adopted files stay invisible until a
+    * manifest references them.
+    */
+  private[sources] def stageBuckets(spark: SparkSession, path: String,
+      df: DataFrame): Seq[String] = {
+    val f = fs(spark)
+    val wid = nonce()
+    val stage = new Path(path + s"_stage_$wid")
+    try df.write.partitionBy("gbucket").mode(SaveMode.Overwrite)
+      .parquet(stage.toString)
+    catch { case e: Throwable => f.delete(stage, true); throw e }
+    val adopted = f.listStatus(stage).filter(_.isDirectory).toSeq.flatMap { d =>
+      val bucketDir = d.getPath.getName // gbucket=N
+      f.mkdirs(new Path(s"$path/$bucketDir"))
+      f.listStatus(d.getPath)
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .toSeq.zipWithIndex.map { case (s, i) =>
+          val rel = f"$bucketDir/w$wid-$i%04d.parquet"
+          if (!f.rename(s.getPath, new Path(s"$path/$rel")))
+            throw new java.io.IOException(s"cannot adopt $rel")
+          rel
+        }
+    }
+    f.delete(stage, true)
+    adopted
+  }
+
   /** Committed versions, ascending (empty → table does not exist). */
   def versions(spark: SparkSession, path: String): Seq[Int] = {
     val dir = new Path(s"$path/$LogDir")

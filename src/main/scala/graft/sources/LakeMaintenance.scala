@@ -165,11 +165,7 @@ trait LakeMaintenance { this: VersionedLake.type =>
     val clustered = df0.withColumn("_zkey", z)
       .repartitionByRange(nb * slicesPerBucket, col("gbucket"), col("_zkey"))
       .drop("_zkey")
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    clustered.write.partitionBy("gbucket").mode(SaveMode.Overwrite)
-      .parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path, clustered)
     commitPending(spark, path, PendingCommit(base, touched,
       TableManifest(adopted, Map.empty,
         stats = computeStats(spark, path, adopted)).lines,
@@ -362,25 +358,15 @@ trait LakeMaintenance { this: VersionedLake.type =>
     * garbage-collected out from under its name.
     */
   def createTag(spark: SparkSession, path: String, name: String,
-      version: Int, maxAttempts: Int = 10): CommitResult = {
+      version: Int): CommitResult = {
     require(name.matches("[A-Za-z0-9_-]+"), s"bad tag name: $name")
     require(versions(spark, path).contains(version),
       s"cannot tag version $version of $path — not committed (or vacuumed)")
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
+    commitManifest(spark, path, "CREATE_TAG") { m =>
       require(!m.props.contains(s"tag.$name"),
         s"tag $name already exists at $path — drop it first")
-      val lines = TableManifest(m.data, m.dv, m.txn,
-        m.props + (s"tag.$name" -> version.toString), m.stats).lines :+
-        "meta\top\tCREATE_TAG"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      m.copy(props = m.props + (s"tag.$name" -> version.toString))
     }
-    throw new java.io.IOException(
-      s"gave up tagging $name at $path after $maxAttempts CAS attempts")
   }
 
   /** DROP TAG — releases the name AND the retention pin. Dropping a
@@ -388,24 +374,15 @@ trait LakeMaintenance { this: VersionedLake.type =>
     * here would leave the REAL tag (typo'd name) pinning files
     * forever with no error anywhere.
     */
-  def dropTag(spark: SparkSession, path: String, name: String,
-      maxAttempts: Int = 10): CommitResult = {
-    require(tags(spark, path).contains(name),
-      s"no tag $name at $path (tags: " +
-        s"${tags(spark, path).keys.toSeq.sorted.mkString(", ")})")
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val lines = manifestLines(spark, path, latest)
-        .filterNot(l => l.startsWith(s"prop\ttag.$name\t") ||
-          isMetaLine(l)) :+ "meta\top\tDROP_TAG"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+  def dropTag(spark: SparkSession, path: String,
+      name: String): CommitResult =
+    commitManifest(spark, path, "DROP_TAG") { m =>
+      require(m.props.contains(s"tag.$name"),
+        s"no tag $name at $path (tags: " + m.props.keys.toSeq.sorted
+          .collect { case k if k.startsWith("tag.") =>
+            k.stripPrefix("tag.") }.mkString(", ") + ")")
+      m.copy(props = m.props - s"tag.$name")
     }
-    throw new java.io.IOException(
-      s"gave up dropping tag $name at $path after $maxAttempts CAS attempts")
-  }
 
   /** The tip's tag table: name → pinned version. */
   def tags(spark: SparkSession, path: String): Map[String, Int] = {

@@ -51,8 +51,9 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     // base is N — fastForwardBranch could then never publish it
     val base = vs.last
     cloneTable(spark, path, bp, Some(base))
-    commitPending(spark, bp, PendingCommit(1, Set.empty,
-      Seq(s"prop\tbranch.base\t$base"), Seq.empty, op = "BRANCH"))
+    commitManifest(spark, bp, "BRANCH") { m =>
+      m.copy(props = m.props + ("branch.base" -> base.toString))
+    }
   }
 
   /** Branch names currently present under the table. */
@@ -131,16 +132,9 @@ trait LakeRefsChanges { this: VersionedLake.type =>
       .filterNot(known.contains).filterNot(rel => f.exists(
         new Path(s"$path/$rel")))
     newFiles.foreach { rel =>
-      val src = new Path(s"$bp/$rel")
       val dst = new Path(s"$path/$rel")
       f.mkdirs(dst.getParent)
-      if (f.getUri.getScheme == "file")
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-      else
-        org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false,
-          spark.sparkContext.hadoopConfiguration)
+      linkOrCopy(spark, new Path(s"$bp/$rel"), dst)
     }
     val lines = TableManifest(bTip.data, bTip.dv, bTip.txn,
       bTip.props - "branch.base", bTip.stats).lines :+
@@ -168,40 +162,27 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     require(name.matches("[A-Za-z0-9_]+"), s"bad constraint name: $name")
     require(!sqlExpr.exists(c => c == '\t' || c == '\n' || c == '\r'),
       "constraint expression must be a single tab-free line")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val tip = manifestEntries(spark, path, vs.last)
-    require(!tip.props.contains(s"constraint.$name"),
-      s"constraint $name already exists — drop it first")
-    val bad = read(spark, path)
-      .filter(!coalesce(expr(sqlExpr), lit(true))).count()
-    if (bad > 0) throw new ConstraintViolation(
-      s"cannot add constraint $name ($sqlExpr): " +
-        s"$bad existing row(s) violate it")
-    commitPending(spark, path, PendingCommit(vs.last, Set.empty,
-      Seq(s"prop\tconstraint.$name\t$sqlExpr"), Seq.empty,
-      op = "ADD_CONSTRAINT"))
+    commitManifest(spark, path, "ADD_CONSTRAINT") { m =>
+      require(!m.props.contains(s"constraint.$name"),
+        s"constraint $name already exists — drop it first")
+      val bad = read(spark, path)
+        .filter(!coalesce(expr(sqlExpr), lit(true))).count()
+      if (bad > 0) throw new ConstraintViolation(
+        s"cannot add constraint $name ($sqlExpr): " +
+          s"$bad existing row(s) violate it")
+      m.copy(props = m.props + (s"constraint.$name" -> sqlExpr))
+    }
   }
 
   /** DROP CONSTRAINT: remove the property as a metadata-only commit
-    * (same CAS retry discipline as [[restore]] — property changes
-    * never conflict with data writes).
+    * ([[commitManifest]] — property changes never conflict with data
+    * writes).
     */
-  def dropConstraint(spark: SparkSession, path: String, name: String,
-      maxAttempts: Int = 10): CommitResult = {
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val lines = manifestLines(spark, path, latest)
-        .filterNot(l => l.startsWith(s"prop\tconstraint.$name\t") ||
-          isMetaLine(l)) :+ "meta\top\tDROP_CONSTRAINT"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+  def dropConstraint(spark: SparkSession, path: String,
+      name: String): CommitResult =
+    commitManifest(spark, path, "DROP_CONSTRAINT") { m =>
+      m.copy(props = m.props - s"constraint.$name")
     }
-    throw new java.io.IOException(
-      s"gave up dropping constraint $name at $path after $maxAttempts attempts")
-  }
 
   // ---- EXPECTATIONS (ON VIOLATION DROP ROW) --------------------------------
 
@@ -225,40 +206,26 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     require(name.matches("[A-Za-z0-9_]+"), s"bad expectation name: $name")
     require(!sqlExpr.exists(c => c == '\t' || c == '\n' || c == '\r'),
       "expectation predicate must be a single tab-free line")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val tip = manifestEntries(spark, path, vs.last)
-    require(!tip.props.contains(s"expect.$name") &&
-      !tip.props.contains(s"constraint.$name"),
-      s"a constraint or expectation named $name already exists")
-    // the predicate must RESOLVE against the table schema now — a typo
-    // discovered at the next write would block ingest, not DDL
-    read(spark, path).filter(coalesce(expr(sqlExpr), lit(true))).queryExecution
-      .analyzed
-    commitPending(spark, path, PendingCommit(vs.last, Set.empty,
-      Seq(s"prop\texpect.$name\t$sqlExpr"), Seq.empty,
-      op = "ADD_EXPECTATION"))
+    commitManifest(spark, path, "ADD_EXPECTATION") { m =>
+      require(!m.props.contains(s"expect.$name") &&
+        !m.props.contains(s"constraint.$name"),
+        s"a constraint or expectation named $name already exists")
+      // the predicate must RESOLVE against the table schema now — a
+      // typo discovered at the next write would block ingest, not DDL
+      read(spark, path).filter(coalesce(expr(sqlExpr), lit(true)))
+        .queryExecution.analyzed
+      m.copy(props = m.props + (s"expect.$name" -> sqlExpr))
+    }
   }
 
-  /** DROP an expectation (metadata-only commit, CAS retry). */
-  def dropExpectation(spark: SparkSession, path: String, name: String,
-      maxAttempts: Int = 10): CommitResult = {
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      require(manifestEntries(spark, path, latest).props
-        .contains(s"expect.$name"),
+  /** DROP an expectation (metadata-only commit, [[commitManifest]]). */
+  def dropExpectation(spark: SparkSession, path: String,
+      name: String): CommitResult =
+    commitManifest(spark, path, "DROP_EXPECTATION") { m =>
+      require(m.props.contains(s"expect.$name"),
         s"no expectation named $name at $path")
-      val lines = manifestLines(spark, path, latest)
-        .filterNot(l => l.startsWith(s"prop\texpect.$name\t") ||
-          isMetaLine(l)) :+ "meta\top\tDROP_EXPECTATION"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      m.copy(props = m.props - s"expect.$name")
     }
-    throw new java.io.IOException(
-      s"gave up dropping expectation $name at $path after $maxAttempts attempts")
-  }
 
   /** Enforce DROP-ROW expectations on a write batch: returns the CLEAN
     * rows plus the per-version meta lines recording what was dropped.
@@ -402,25 +369,15 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     * than classifying conflicts; concurrent writers' commits landed
     * before the restore are rolled back with everything else.
     */
-  def restore(spark: SparkSession, path: String, toVersion: Int,
-      maxAttempts: Int = 10): CommitResult = {
+  def restore(spark: SparkSession, path: String,
+      toVersion: Int): CommitResult = {
     val vs0 = versions(spark, path)
     require(vs0.contains(toVersion),
       s"version $toVersion not in $vs0 (vacuumed or never committed)")
     val target = manifestEntries(spark, path, toVersion)
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val cur = manifestEntries(spark, path, latest)
-      val lines =
-        TableManifest(target.data, target.dv, cur.txn, cur.props,
-          target.stats).lines :+ "meta\top\tRESTORE"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+    commitManifest(spark, path, "RESTORE") { m =>
+      TableManifest(target.data, target.dv, m.txn, m.props, target.stats)
     }
-    throw new java.io.IOException(
-      s"gave up restoring $path to v$toVersion after $maxAttempts CAS attempts")
   }
 
   /** CHANGE DATA FEED between two committed versions, computed from the
@@ -624,10 +581,7 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     // bucket — the point of the exercise
     val df = loadWithDv(spark, path, files, m.dv, widen = widenMap(m))
       .repartition(col("gbucket"))
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    df.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path, df)
     commitPending(spark, path,
       PendingCommit(base, touched,
         TableManifest(adopted, Map.empty,
@@ -689,14 +643,8 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     val resolved =
       if (isTracked(m)) assignFreshRowIds(resolved0, keyColsP, rowIdHwm(m))
       else resolved0
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    try resolved.repartition(col("gbucket"))
-      .write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    catch { case e: Throwable =>
-      fs(spark).delete(new Path(stage), true); throw e
-    }
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path,
+      resolved.repartition(col("gbucket")))
     val touched = (m.data.map(bucketOf) ++ adopted.map(bucketOf)).toSet
     commitPending(spark, path,
       PendingCommit(base, touched,
@@ -732,10 +680,7 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     val df = loadWithDv(spark, path, m.data, m.dv, widen = widenMap(m))
       .repartitionByRange(nb * slicesPerBucket,
         col("gbucket"), col(columnP))
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    df.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path, df)
     commitPending(spark, path, PendingCommit(base, touched,
       TableManifest(adopted, Map.empty,
         stats = computeStats(spark, path, adopted)).lines,

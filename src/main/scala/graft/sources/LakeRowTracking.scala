@@ -126,19 +126,22 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val base = vs.last
     val m = manifestEntries(spark, path, base)
     require(!isTracked(m), s"row tracking already enabled at $path")
+    // an empty table has nothing to backfill: a property stamp, valid
+    // only while the tip is still untracked and empty
     if (m.data.isEmpty)
-      return commitPending(spark, path, PendingCommit(base, Set.empty,
-        Seq("prop\trowTracking\ttrue", "prop\trowid.hwm\t0"),
-        Seq.empty, op = "ROW_TRACKING_BACKFILL"))
+      return commitManifest(spark, path, "ROW_TRACKING_BACKFILL") { t =>
+        require(!isTracked(t), s"row tracking already enabled at $path")
+        require(t.data.isEmpty,
+          s"$path gained data while row tracking was being enabled — re-run")
+        t.copy(props = t.props ++
+          Seq("rowTracking" -> "true", "rowid.hwm" -> "0"))
+      }
     val df = loadWithDv(spark, path, m.data, m.dv, keepPos = true,
       widen = widenMap(m))
       .withColumn("_row_id", row_number().over(
         Window.orderBy(col("_rel"), col("_pos"))).cast("long"))
       .drop("_rel", "_pos")
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    df.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path, df)
     val touched = (m.data.map(bucketOf) ++ adopted.map(bucketOf)).toSet
     val hwm = adoptedMaxRowId(spark, path, adopted, 0L)
     commitPending(spark, path, PendingCommit(base, touched,
@@ -263,13 +266,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
       if (tracked) assignFreshRowIds(merged0, keyColsP, rowIdHwm(prior))
         .repartition(col("gbucket"))
       else merged0
-    // stage new bucket files, then adopt them under immutable
-    // writer-nonced names; staging never touches live data, and no two
-    // writers can collide on a physical name
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    merged.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    val adopted = stageBuckets(spark, path, merged)
     // ourLines = the touched buckets' complete new representation: the
     // adopted files, no DV lines (the rewrite materialized deletes).
     // Untouched-bucket lines are re-derived from whatever manifest the
@@ -286,9 +283,12 @@ trait LakeRowTracking { this: VersionedLake.type =>
     } finally if (wePersist) updates.unpersist(blocking = false)
   }
 
-  /** Phase 2: the optimistic commit loop. Try the CAS at
-    * baseVersion + 1; on loss, classify the conflict against what
-    * actually changed since the base snapshot:
+  /** Phase 2: the commit loop for STAGED DATA written against a base
+    * snapshot — every data write, compaction and rewrite. (Changes
+    * derived from the tip alone, with nothing staged, go through
+    * [[commitManifest]], which re-derives them each round instead.)
+    * Try the CAS at baseVersion + 1; on loss, classify the conflict
+    * against what actually changed since the base snapshot:
     *
     *  - DISJOINT buckets — the winner's merge and ours commute (a
     *    key's resolution only ever reads its own bucket), so REBASE:
@@ -303,10 +303,11 @@ trait LakeRowTracking { this: VersionedLake.type =>
     * This is Delta/Iceberg commit-conflict semantics with the bucket
     * as the conflict granule. At 100 TB the rebase path is what makes
     * trickle writers scale: disjoint-shard ingest never re-reads data,
-    * only re-lists the manifest.
+    * only re-lists the manifest. Gives up after [[MaxCommitRounds]]
+    * rebase rounds.
     */
-  def commitPending(spark: SparkSession, path: String, p: PendingCommit,
-      maxRebase: Int = 10): CommitResult = {
+  def commitPending(spark: SparkSession, path: String,
+      p: PendingCommit): CommitResult = {
     val baseLines: Set[String] =
       if (p.baseVersion == 0) Set.empty
       else manifestLines(spark, path, p.baseVersion).toSet
@@ -365,8 +366,8 @@ trait LakeRowTracking { this: VersionedLake.type =>
             "the new snapshot")
       }
       rounds += 1
-      if (rounds > maxRebase) throw new java.io.IOException(
-        s"gave up after $maxRebase rebase rounds at $path")
+      if (rounds > MaxCommitRounds) throw new java.io.IOException(
+        s"gave up after $MaxCommitRounds rebase rounds at $path")
       manifest = assemble(latestLines)
       base = latest
     }
@@ -407,14 +408,8 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val dir = new Path(f"$path/$ChangesDir/v$version%06d")
     f.mkdirs(dir)
     dataFiles.foreach { rel =>
-      val dst = new Path(dir, rel.replace('/', '_'))
-      if (f.getUri.getScheme == "file")
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(s"$path/$rel"))
-      else // no hard links on object stores: copy (change-scale bytes)
-        org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$path/$rel"),
-          f, dst, false, spark.sparkContext.hadoopConfiguration)
+      linkOrCopy(spark, new Path(s"$path/$rel"),
+        new Path(dir, rel.replace('/', '_')))
     }
   }
 
@@ -504,29 +499,6 @@ trait LakeRowTracking { this: VersionedLake.type =>
       .withColumn("_commit_version",
         regexp_extract(input_file_name(),
           s"/$ChangesDir/v(\\d+)/", 1).cast("int"))
-  }
-
-  /** Adopt every staged bucket file under immutable writer-nonced
-    * names; returns the adopted relative paths.
-    */
-  private[sources] def adoptStaged(spark: SparkSession, path: String, stage: String,
-      wid: String): Seq[String] = {
-    val f = fs(spark)
-    val adopted = scala.collection.mutable.ArrayBuffer[String]()
-    f.listStatus(new Path(stage)).filter(_.isDirectory).foreach { d =>
-      val bucketDir = d.getPath.getName // gbucket=N
-      f.mkdirs(new Path(s"$path/$bucketDir"))
-      f.listStatus(d.getPath)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (s, i) =>
-          val rel = f"$bucketDir/w$wid-$i%04d.parquet"
-          if (!f.rename(s.getPath, new Path(s"$path/$rel")))
-            throw new java.io.IOException(s"cannot adopt $rel")
-          adopted += rel
-        }
-    }
-    f.delete(new Path(stage), true)
-    adopted.toSeq
   }
 
   /** Land one DV sidecar: `hits` (file_rel, pos) unioned with the
@@ -850,10 +822,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
       if (tracked) assignFreshRowIds(winners, keyCols2, rowIdHwm(m))
         .repartition(col("gbucket"))
       else winners
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    out.write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val appended = adoptStaged(spark, path, stage, wid)
+    val appended = stageBuckets(spark, path, out)
     if (dvOut.isEmpty && appended.isEmpty) return CommitResult(base, 0)
     val dvAffected = dvOut.map(_._2).getOrElse(Seq.empty)
     val touched = (dvAffected.map(bucketOf) ++ appended.map(bucketOf)).toSet
@@ -876,7 +845,8 @@ trait LakeRowTracking { this: VersionedLake.type =>
     * file by reference, and commit a DV-free representation of the
     * touched buckets. This is the compaction half of the
     * merge-on-read bargain — reads pay the anti-join until compaction
-    * amortizes it away.
+    * amortizes it away. `numBuckets` is unused (the table's own
+    * modulus governs); it stays for callers that pass it.
     */
   def compactDvs(spark: SparkSession, path: String,
       numBuckets: Int = 16): CommitResult = {
@@ -890,14 +860,12 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val cleanCarried = m.data
       .filter(rel => touched.contains(bucketOf(rel)) && !m.dv.contains(rel))
     val df = loadWithDv(spark, path, dvFiles, m.dv, widen = widenMap(m))
-    val wid = nonce()
-    val stage = path + s"_stage_$wid"
-    // bucket-keyed exchange: OPTIMIZE actually compacts each touched
-    // bucket to one file (the per-input-file scan partitioning would
-    // otherwise rewrite N files into N files — r17, guide §6)
-    df.repartition(col("gbucket"))
-      .write.partitionBy("gbucket").mode(SaveMode.Overwrite).parquet(stage)
-    val adopted = adoptStaged(spark, path, stage, wid)
+    // bucket-keyed exchange: a touched bucket's DV-carrying files fold
+    // into ONE new file (the per-input-file scan partitioning would
+    // otherwise rewrite N files into N files — r17, guide §6). Its
+    // clean files are not rewritten; they carry by reference, so the
+    // bucket holds the new file beside them
+    val adopted = stageBuckets(spark, path, df.repartition(col("gbucket")))
     val carriedStats = m.stats.view
       .filterKeys(cleanCarried.toSet).toMap
     commitPending(spark, path, PendingCommit(base, touched,
@@ -942,16 +910,9 @@ trait LakeRowTracking { this: VersionedLake.type =>
       s"$dest already has committed versions — clone targets a fresh path")
     val m = manifestEntries(spark, source, cloneV)
     (m.data ++ m.dv.values.toSeq.distinct).foreach { rel =>
-      val src = new Path(s"$source/$rel")
       val dst = new Path(s"$dest/$rel")
       f.mkdirs(dst.getParent)
-      if (f.getUri.getScheme == "file")
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-      else
-        org.apache.hadoop.fs.FileUtil.copy(f, src, f, dst, false,
-          spark.sparkContext.hadoopConfiguration)
+      linkOrCopy(spark, new Path(s"$source/$rel"), dst)
     }
     val lines = TableManifest(m.data, m.dv, Map.empty, m.props,
       m.stats).lines :+ "meta\top\tCLONE"

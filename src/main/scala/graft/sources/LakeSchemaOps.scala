@@ -115,17 +115,12 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     * keeps physical `a`), so chained renames never touch data either.
     */
   def renameColumn(spark: SparkSession, path: String, from: String,
-      to: String, maxAttempts: Int = 10): CommitResult = {
+      to: String): CommitResult = {
     require(from.matches("[A-Za-z0-9_]+") && to.matches("[A-Za-z0-9_]+"),
       s"bad column name in rename $from -> $to")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
+    require(to != from, s"rename to self: $from")
+    commitManifest(spark, path, "RENAME_COLUMN") { m =>
       val map = renameMap(m)
-      require(to != from, s"rename to self: $from")
       require(!map.contains(to),
         s"logical column $to already exists at $path")
       // the destination must be free in the FULL logical schema, not
@@ -153,16 +148,9 @@ trait LakeSchemaOps { this: VersionedLake.type =>
             s"$from — drop it before renaming")
       }
       val physical = map.getOrElse(from, from)
-      val newProps = (m.props - s"rename.$from") +
-        (s"rename.$to" -> physical)
-      val lines = TableManifest(m.data, m.dv, m.txn, newProps,
-        m.stats).lines :+ "meta\top\tRENAME_COLUMN"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      m.copy(props = (m.props - s"rename.$from") +
+        (s"rename.$to" -> physical))
     }
-    throw new java.io.IOException(
-      s"gave up renaming $from at $path after $maxAttempts CAS attempts")
   }
 
   /** ADD COLUMN — a metadata-only commit declaring a new nullable
@@ -176,28 +164,18 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     * the catalog's alterTable with an AddColumn change).
     */
   def addColumn(spark: SparkSession, path: String, name: String,
-      sqlType: String, maxAttempts: Int = 10): CommitResult = {
+      sqlType: String): CommitResult = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad column name: $name")
     // the type must parse NOW, not at first read
     org.apache.spark.sql.types.DataType.fromDDL(sqlType)
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
+    commitManifest(spark, path, "ADD_COLUMN") { m =>
       require(!read(spark, path).columns.contains(name),
         s"column $name already exists at $path")
       require(!m.props.contains(s"dropped.$name"),
         s"physical slot $name is retained by a dropped column — " +
           "pick a new name")
-      val lines = TableManifest(m.data, m.dv, m.txn,
-        m.props + (s"added.$name" -> sqlType), m.stats).lines :+
-        "meta\top\tADD_COLUMN"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      m.copy(props = m.props + (s"added.$name" -> sqlType))
     }
-    throw new java.io.IOException(
-      s"gave up adding column $name at $path after $maxAttempts attempts")
   }
 
   /** DROP COLUMN — Delta column-mapping semantics: a metadata-only
@@ -210,17 +188,12 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     * retained — re-adding the name requires a rewrite or a new name,
     * the honest contract for rewrite-free drops.
     */
-  def dropColumn(spark: SparkSession, path: String, name: String,
-      maxAttempts: Int = 10): CommitResult = {
+  def dropColumn(spark: SparkSession, path: String,
+      name: String): CommitResult = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad column name: $name")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
     require(name != "_deleted" && name != "gbucket",
       s"$name is engine bookkeeping — not droppable")
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
+    commitManifest(spark, path, "DROP_COLUMN") { m =>
       val logicalCols = read(spark, path).columns.toSet
       require(logicalCols.contains(name),
         s"column $name does not exist at $path")
@@ -234,17 +207,9 @@ trait LakeSchemaOps { this: VersionedLake.type =>
           k != s"generated.$name"),
           s"$k references $name — drop it before dropping the column")
       }
-      val physical = toPhysicalName(m, name)
-      val newProps = (m.props - s"rename.$name") +
-        (s"dropped.$physical" -> "1")
-      val lines = TableManifest(m.data, m.dv, m.txn, newProps,
-        m.stats).lines :+ "meta\top\tDROP_COLUMN"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      m.copy(props = (m.props - s"rename.$name") +
+        (s"dropped.${toPhysicalName(m, name)}" -> "1"))
     }
-    throw new java.io.IOException(
-      s"gave up dropping $name at $path after $maxAttempts CAS attempts")
   }
 
   // ---- type widening -------------------------------------------------------
@@ -282,34 +247,21 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     * the property set is versioned manifest state.
     */
   def widenColumn(spark: SparkSession, path: String, name: String,
-      toType: String, maxAttempts: Int = 10): CommitResult = {
+      toType: String): CommitResult = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad column name: $name")
     val target = WidenTargets.getOrElse(toType.toLowerCase,
       throw new IllegalArgumentException(
         s"unsupported widen target $toType (allowed: ${WidenTargets.keys.toSeq.sorted.mkString(", ")})"))
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val cur = read(spark, path).schema
-    val field = cur.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(
-        s"column $name does not exist at $path"))
-    require(promotable(field.dataType, target),
-      s"cannot widen $name from ${field.dataType.simpleString} to " +
-        s"${target.simpleString} — only exact embeddings are allowed")
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
-      val physical = toPhysicalName(m, name)
-      val lines = TableManifest(m.data, m.dv, m.txn,
-        m.props + (s"widen.$physical" -> target.simpleString),
-        m.stats).lines :+ "meta\top\tWIDEN_COLUMN"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+    commitManifest(spark, path, "WIDEN_COLUMN") { m =>
+      val field = read(spark, path).schema.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(
+          s"column $name does not exist at $path"))
+      require(promotable(field.dataType, target),
+        s"cannot widen $name from ${field.dataType.simpleString} to " +
+          s"${target.simpleString} — only exact embeddings are allowed")
+      m.copy(props = m.props +
+        (s"widen.${toPhysicalName(m, name)}" -> target.simpleString))
     }
-    throw new java.io.IOException(
-      s"gave up widening $name at $path after $maxAttempts CAS attempts")
   }
 
   /** The read schema of `files` under widening overrides: per-file
@@ -397,34 +349,22 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     * semantic for retrofitted generation.
     */
   def addGeneratedColumn(spark: SparkSession, path: String, name: String,
-      sqlExpr: String, maxAttempts: Int = 10): CommitResult = {
+      sqlExpr: String): CommitResult = {
     require(name.matches("[A-Za-z0-9_]+"), s"bad column name: $name")
     require(!sqlExpr.exists(c => c == '\t' || c == '\n' || c == '\r'),
       "generated-column expression must be a single tab-free line")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val cur = read(spark, path)
-    if (cur.columns.contains(name)) {
-      val bad = cur.filter(!(col(name) <=> expr(sqlExpr))).count()
-      if (bad > 0) throw new ConstraintViolation(
-        s"cannot define generated column $name: $bad existing row(s) " +
-          s"contradict `$sqlExpr`")
-    }
-    var attempts = 0
-    while (attempts <= maxAttempts) {
-      val latest = versions(spark, path).last
-      val m = manifestEntries(spark, path, latest)
+    commitManifest(spark, path, "ADD_GENERATED") { m =>
       require(!m.props.contains(s"generated.$name"),
         s"generated column $name already defined — no redefinition")
-      val lines = TableManifest(m.data, m.dv, m.txn,
-        m.props + (s"generated.$name" -> sqlExpr), m.stats).lines :+
-        "meta\top\tADD_GENERATED"
-      if (casCommit(spark, path, latest + 1, lines))
-        return CommitResult(latest + 1, attempts)
-      attempts += 1
+      val cur = read(spark, path)
+      if (cur.columns.contains(name)) {
+        val bad = cur.filter(!(col(name) <=> expr(sqlExpr))).count()
+        if (bad > 0) throw new ConstraintViolation(
+          s"cannot define generated column $name: $bad existing row(s) " +
+            s"contradict `$sqlExpr`")
+      }
+      m.copy(props = m.props + (s"generated.$name" -> sqlExpr))
     }
-    throw new java.io.IOException(
-      s"gave up adding generated column $name after $maxAttempts attempts")
   }
 
   /** Per-column [lo, hi] bounds IMPLIED by a Catalyst predicate tree —
@@ -782,82 +722,6 @@ trait LakeSchemaOps { this: VersionedLake.type =>
         throw new IllegalArgumentException("no data files to scan")
     }
     if (keepPos) alive else alive.drop("_rel", "_pos")
-  }
-
-  /** Compare-and-swap commit: write the full file list to a
-    * writer-private temp manifest, then PUBLISH it at the target
-    * version with an operation that atomically fails if that version
-    * already exists — Delta-style optimistic concurrency, where the
-    * version slot is the lock. Returns false when another writer owns
-    * the version (the caller rebases or aborts); the losing temp is
-    * removed, so a lost race leaves no litter.
-    *
-    * Publish primitive by filesystem: on local files, `link(2)` via
-    * `Files.createLink` — POSIX guarantees EEXIST atomically, and the
-    * link exposes the COMPLETE temp content in one step (a plain
-    * `rename(2)` would silently REPLACE an existing manifest — exactly
-    * the lost-update race this exists to close). On HDFS-like stores,
-    * `rename` itself refuses an existing destination atomically, so it
-    * is the CAS.
-    */
-  /** Choose the physical encoding for a manifest about to land as
-    * `version`: a delta against the parent slot when that is smaller,
-    * a full snapshot on checkpoint versions, for v1, when the parent is
-    * unreadable, or when line multiplicity would make set-diff lossy.
-    */
-  private[sources] def encodeManifest(spark: SparkSession, path: String,
-      version: Int, sorted: Seq[String]): Seq[String] = {
-    if (version <= 1 || version % ManifestCheckpointInterval == 0)
-      return sorted
-    scala.util.Try(manifestLines(spark, path, version - 1)).toOption match {
-      case None => sorted
-      case Some(parent) =>
-        val pSet = parent.toSet
-        val cSet = sorted.toSet
-        if (pSet.size != parent.length || cSet.size != sorted.length) sorted
-        else {
-          val removed = parent.filterNot(cSet)
-          val added = sorted.filterNot(pSet)
-          val delta = s"$DeltaHeaderPrefix${version - 1}" +:
-            (removed.map("-\t" + _) ++ added.map("+\t" + _))
-          if (delta.length < sorted.length) delta else sorted
-        }
-    }
-  }
-
-  private[sources] def casCommit(spark: SparkSession, path: String, version: Int,
-      files: Seq[String]): Boolean = {
-    val f = fs(spark)
-    f.mkdirs(new Path(s"$path/$LogDir"))
-    val tmp = new Path(s"$path/$LogDir/.v$version-${nonce()}.tmp")
-    // central commit-time stamp: every commit path flows through here
-    val content = encodeManifest(spark, path, version,
-      (files.filterNot(_.startsWith("meta\tts\t")) :+
-        s"meta\tts\t${clockFor(path)}").sorted)
-    val out = f.create(tmp, true)
-    try out.write(content.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = manifestPath(path, version)
-    if (f.getUri.getScheme == "file") {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        f.delete(tmp, false)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false); false
-      }
-    } else {
-      // HDFS rename is atomic and refuses an existing destination
-      if (f.exists(dst)) { f.delete(tmp, false); false }
-      else {
-        val won = f.rename(tmp, dst)
-        if (!won) f.delete(tmp, false)
-        won
-      }
-    }
   }
 
   /** MERGE-style upsert committing a new version. Same contract as

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -67,14 +67,8 @@ object TxnGroup {
   final class ConcurrentTxnConflict(msg: String)
     extends RuntimeException(msg)
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   private def gPath(groupPath: String, v: Int): Path =
     new Path(f"$groupPath/$LogDir/v$v%06d.txt")
-
-  private def nonce(): String =
-    java.util.UUID.randomUUID().toString.substring(0, 8)
 
   /** Transactions are observable through the same SQL surface as
     * pipeline runs: every begin/commit appends to the
@@ -92,7 +86,7 @@ object TxnGroup {
 
   def groupVersions(spark: SparkSession, groupPath: String): Seq[Int] = {
     val dir = new Path(s"$groupPath/$LogDir")
-    val f = fs(spark)
+    val f = VersionedLake.fs(spark)
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.endsWith(".txt"))
@@ -102,7 +96,7 @@ object TxnGroup {
 
   private def linesAt(spark: SparkSession, groupPath: String,
       v: Int): Seq[String] = {
-    val in = fs(spark).open(gPath(groupPath, v))
+    val in = VersionedLake.fs(spark).open(gPath(groupPath, v))
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .filter(_.nonEmpty).toList
     finally in.close()
@@ -133,31 +127,6 @@ object TxnGroup {
     (vs.last, tipAt(spark, groupPath, vs.last))
   }
 
-  private def casGroup(spark: SparkSession, groupPath: String, v: Int,
-      lines: Seq[String]): Boolean = {
-    val f = fs(spark)
-    f.mkdirs(new Path(s"$groupPath/$LogDir"))
-    val tmp = new Path(s"$groupPath/$LogDir/.v$v-${nonce()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = gPath(groupPath, v)
-    if (f.getUri.getScheme == "file") {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        f.delete(tmp, false); true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false); false
-      }
-    } else {
-      if (f.exists(dst)) { f.delete(tmp, false); false }
-      else { val won = f.rename(tmp, dst); if (!won) f.delete(tmp, false); won }
-    }
-  }
-
   /** Register a group over EXISTING tables; each member's current
     * chain tip becomes its first published version (members join with
     * their content visible — a group over unseeded tables would have
@@ -176,7 +145,7 @@ object TxnGroup {
       entries.map { case (n, p, _) => s"member\t$n\t$p" } ++
         entries.map { case (n, _, v) => s"tbl\t$n\t$v" } :+
         "meta\top\tCREATE"
-    require(casGroup(spark, groupPath, 1, lines),
+    require(VersionedLake.createIfAbsent(spark, gPath(groupPath, 1), lines),
       s"transaction group already exists at $groupPath")
   }
 
@@ -226,7 +195,8 @@ object TxnGroup {
           mem.toSeq.sorted.map { case (n, p) => s"member\t$n\t$p" } ++
             newMap.toSeq.sorted.map { case (n, v) => s"tbl\t$n\t$v" } :+
             "meta\top\tTXN"
-        if (casGroup(spark, groupPath, attemptV + 1, lines)) {
+        if (VersionedLake.createIfAbsent(spark,
+            gPath(groupPath, attemptV + 1), lines)) {
           newMap.toSeq.sorted.foreach { case (n, v) =>
             logEvent(groupPath, "txn_commit", n,
               if (written.contains(n)) "advanced" else "carried", v,
@@ -291,7 +261,8 @@ object TxnGroup {
         mem.toSeq.sorted.map { case (n, p) => s"member\t$n\t$p" } ++
           newMap.toSeq.sorted.map { case (n, v) => s"tbl\t$n\t$v" } :+
           "meta\top\tTXN"
-      if (casGroup(spark, groupPath, attemptV + 1, lines)) {
+      if (VersionedLake.createIfAbsent(spark,
+          gPath(groupPath, attemptV + 1), lines)) {
         newMap.toSeq.sorted.foreach { case (n, v) =>
           logEvent(groupPath, "txn_commit", n,
             if (written.contains(n)) "advanced" else "carried", v,

@@ -83,6 +83,35 @@ class DistSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Dist.multisetEqual(b, a))
   }
 
+  test("globalRunningSum refuses a non-DECIMAL value, naming its type") {
+    val df = (1L to 10L).map(i => (i, i * 3)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      Dist.globalRunningSum(df, Seq(col("k")), col("v"), 4,
+        "rnk", "cum", "total")
+    }
+    assert(e.getMessage.contains("bigint"), e.getMessage)
+  }
+
+  test("multisetEqual compares input columns named like its helpers") {
+    // frames that differ only in a column named `_sgn` (or `_d`) must
+    // compare unequal, and identical ones equal: helper columns never
+    // replace or shadow an input column
+    for (name <- Seq("_sgn", "_SGN", "_d")) {
+      val a = Seq((1, 5), (2, 6)).toDF("n", name)
+      val b = Seq((1, 5), (2, 7)).toDF("n", name)
+      assert(!Dist.multisetEqual(a, b), name)
+      assert(Dist.multisetEqual(a, a.orderBy(col("n").desc)), name)
+    }
+  }
+
+  test("hitsAndTotal compares an input column named like its helper") {
+    val out = Seq((1L, 1), (2L, 0)).toDF("p", "_h")
+    val truth = Seq((1L, 1), (2L, 1)).toDF("p", "_h")
+    val (h, t) = Dist.hitsAndTotal(out, truth)
+    assert(h == out.intersect(truth).count() && t == truth.count())
+    assert(h == 1L && t == 2L)
+  }
+
   test("hitsAndTotal == intersect().count() + truth.count()") {
     val out = Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("p", "n")
     val truth = Seq((1L, 10L), (2L, 10L), (2L, 12L)).toDF("p", "n")

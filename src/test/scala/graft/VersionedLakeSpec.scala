@@ -670,4 +670,98 @@ class VersionedLakeSpec extends AnyFunSuite {
     }
     assert(rebuilt == s2, "v1 + diff != v2")
   }
+
+  /** Run `tasks` on their own threads, all released by one latch;
+    * returns (results, errors).
+    */
+  private def race[T](tasks: Seq[() => T]): (Seq[T], Seq[Throwable]) = {
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[T]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = tasks.map { t =>
+      new Thread(() => {
+        go.await()
+        try results.add(t()) catch { case e: Throwable => errors.add(e) }
+      })
+    }
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    (results.asScala.toSeq, errors.asScala.toSeq)
+  }
+
+  test("racing ADD CONSTRAINT of one name: exactly one lands") {
+    val path = graft.sources.Scratch.dir("vlake_ck_race")
+    VersionedLake.upsert(spark, path,
+      (1L to 20L).map(i => (i, s"a$i", i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq", numBuckets = 4)
+    // each validation runs a Spark count, so both checks are in flight
+    // before either CAS: the loser must re-validate against the tip
+    val (ok, errors) = race(Seq("x IS NOT NULL", "seq > 0").map(e =>
+      () => VersionedLake.addConstraint(spark, path, "c", e)))
+    assert(ok.size == 1, s"both ADD CONSTRAINT c committed: $ok")
+    assert(errors.size == 1 &&
+      errors.head.isInstanceOf[IllegalArgumentException], errors)
+    val tip = VersionedLake.versions(spark, path).last
+    assert(tip == 2)
+    assert(VersionedLake.resolvedManifest(spark, path, tip)
+      .count(_.startsWith("prop\tconstraint.c\t")) == 1)
+  }
+
+  test("racing tag commits and an upsert all land on one contiguous chain") {
+    val path = graft.sources.Scratch.dir("vlake_tag_race")
+    VersionedLake.upsert(spark, path,
+      (1L to 40L).map(i => (i, s"a$i", i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq", numBuckets = 4)
+    val upd = (31L to 50L).map(i => (i, s"b$i", 100L + i))
+      .toDF("k", "x", "seq")
+    val tagTasks = (1 to 4).map(i =>
+      () => VersionedLake.createTag(spark, path, s"t$i", 1))
+    val (ok, errors) = race(tagTasks :+
+      (() => VersionedLake.upsert(spark, path, upd, Seq("k"), "seq")))
+    assert(errors.isEmpty, s"a commit failed: ${errors.headOption}")
+    assert(ok.map(_.version).sorted == (2 to 6))
+    assert(VersionedLake.versions(spark, path) == (1 to 6))
+    assert(VersionedLake.tags(spark, path) ==
+      (1 to 4).map(i => s"t$i" -> 1).toMap)
+    assert(state(path, None) ==
+      ((1L to 30L).map(i => Row3(i, s"a$i", i)) ++
+        (31L to 50L).map(i => Row3(i, s"b$i", 100L + i))))
+  }
+
+  test("a staged write that throws leaves no staging directory behind") {
+    val path = graft.sources.Scratch.dir("vlake_stage_fail")
+    VersionedLake.upsert(spark, path,
+      (1L to 8L).map(i => (i, s"a$i", i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq", numBuckets = 4)
+    // a generated column that raises for k = 3: neither the batch's
+    // bucket collect nor its cache evaluates it before the write
+    VersionedLake.addGeneratedColumn(spark, path, "g",
+      "CASE WHEN k = 3 THEN raise_error('boom') ELSE k * 2 END")
+    val tip = VersionedLake.versions(spark, path).last
+    val batch = Seq((3L, "b3", 20L)).toDF("k", "x", "seq")
+    // adaptive execution runs the write's exchange as its own job,
+    // before the write sets up its output directory; without it the
+    // write job itself fails, after the staging directory exists
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      intercept[Exception] {
+        VersionedLake.upsert(spark, path, batch, Seq("k"), "seq")
+      }
+      intercept[Exception] {
+        VersionedLake.dvUpsert(spark, path, batch, Seq("k"), "seq")
+      }
+      intercept[Exception] {
+        VersionedLake.replaceSnapshot(spark, path, batch, Seq("k"), "seq")
+      }
+    } finally spark.conf.set(aqe, prev)
+    assert(VersionedLake.versions(spark, path).last == tip)
+    val table = new java.io.File(path)
+    val staged = table.getParentFile.listFiles()
+      .filter(_.getName.startsWith(table.getName + "_stage_"))
+    assert(staged.isEmpty,
+      s"staging left behind: ${staged.map(_.getName).mkString(", ")}")
+    assert(state(path, None) == (1L to 8L).map(i => Row3(i, s"a$i", i)))
+  }
 }

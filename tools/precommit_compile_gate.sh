@@ -41,7 +41,8 @@ if git diff --cached --name-only | grep -q '^src/main/'; then
   echo "[compile-gate] perfbench OK"
 fi
 
-# All-queries smoke (CoreSpec at sf0.001, ~3 min): compiling is not
+# All-queries smoke (CoreSpec + PlanAuditSpec at sf0.001; each runs every
+# registered query, about 670 s + 710 s on a 4-core VM): compiling is not
 # verifying — r11's snapshot shipped a runtime-broken operator and a
 # red suite through the compile-only gate. Skip for INTERMEDIATE
 # commits with GRAFT_SKIP_SMOKE=1; the final commits of a round must
