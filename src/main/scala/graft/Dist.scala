@@ -94,21 +94,22 @@ object Dist {
     */
   def globalRowNumber(df: DataFrame, order: Seq[Column], parts: Int,
       out: String): DataFrame = {
+    val pid = freshPrefix(df.columns.toSeq :+ out) + "_pid"
     val p = df.repartitionByRange(parts, order: _*)
-      .withColumn("_grn_pid", spark_partition_id())
+      .withColumn(pid, spark_partition_id())
     Caching.withCached(p) {
-      val counts = p.groupBy(col("_grn_pid")).count()
+      val counts = p.groupBy(col(pid)).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val offsets = (0 until parts).map { i =>
         (i, (0 until i).map(counts.getOrElse(_, 0L)).sum)
       }
       val offsetExpr = offsets.foldLeft(lit(0L)) { case (e, (i, off)) =>
-        when(col("_grn_pid") === i, lit(off)).otherwise(e)
+        when(col(pid) === i, lit(off)).otherwise(e)
       }
-      val pw = Window.partitionBy(col("_grn_pid")).orderBy(order: _*)
+      val pw = Window.partitionBy(col(pid)).orderBy(order: _*)
       p.withColumn(out,
           row_number().over(pw).cast("long") + offsetExpr)
-        .drop("_grn_pid")
+        .drop(pid)
     }
   }
 
@@ -123,7 +124,8 @@ object Dist {
     */
   def globalNtile(df: DataFrame, order: Seq[Column], k: Int, parts: Int,
       out: String): DataFrame = {
-    val ranked = globalRowNumber(df, order, parts, "_gnt_r")
+    val r = freshPrefix(df.columns.toSeq :+ out) + "_r"
+    val ranked = globalRowNumber(df, order, parts, r)
     // n from a cheap count over the already-checkpointed rank frame
     // (globalRowNumber materializes via withCached)
     val n = ranked.count()
@@ -135,10 +137,10 @@ object Dist {
     // exact multiple of b, so the IEEE division is exact below 2^53
     def idiv(a: org.apache.spark.sql.Column, b: Long) =
       ((a - pmod(a, lit(b))) / lit(b)).cast("long")
-    val r0 = col("_gnt_r") - 1 // 0-based rank
+    val r0 = col(r) - 1 // 0-based rank
     val bucket = when(r0 < cut, idiv(r0, bigSz))
       .otherwise(lit(nBig) + idiv(r0 - lit(cut), smallSz))
-    ranked.withColumn(out, (bucket + 1).cast("int")).drop("_gnt_r")
+    ranked.withColumn(out, (bucket + 1).cast("int")).drop(r)
   }
 
   /** `df` plus 1-based global rank (`rankOut`) and the RUNNING SUM of
@@ -159,12 +161,14 @@ object Dist {
     require(valueType.isInstanceOf[org.apache.spark.sql.types.DecimalType],
       s"globalRunningSum sums DECIMAL values only; got " +
         s"${valueType.simpleString} — cast the value to a DECIMAL first")
+    val h = freshPrefix(df.columns.toSeq ++ Seq(rankOut, cumOut, totalOut))
+    val (pid, v) = (s"${h}_pid", s"${h}_v")
     val p = df.repartitionByRange(parts, order: _*)
-      .withColumn("_grs_pid", spark_partition_id())
-      .withColumn("_grs_v", value)
+      .withColumn(pid, spark_partition_id())
+      .withColumn(v, value)
     Caching.withCached(p) {
-      val sums = p.groupBy(col("_grs_pid"))
-        .agg(count(lit(1)).as("_n"), sum(col("_grs_v")).as("_s"))
+      val sums = p.groupBy(col(pid))
+        .agg(count(lit(1)).as("_n"), sum(col(v)).as("_s"))
         .collect().map(r => r.getInt(0) ->
           ((r.getLong(1), Option(r.getDecimal(2))
             .map(BigDecimal(_)).getOrElse(BigDecimal(0)))))
@@ -178,14 +182,14 @@ object Dist {
       }
       val total = sums.values.map(_._2).foldLeft(BigDecimal(0))(_ + _)
       val cntExpr = cntOff.foldLeft(lit(0L)) { case (e, (i, off)) =>
-        when(col("_grs_pid") === i, lit(off)).otherwise(e)
+        when(col(pid) === i, lit(off)).otherwise(e)
       }
       val sumExpr = sumOff.foldLeft(lit(BigDecimal(0)).cast(
         org.apache.spark.sql.types.DecimalType(38, 18))) {
         case (e, (i, off)) =>
-          when(col("_grs_pid") === i, lit(off.underlying())).otherwise(e)
+          when(col(pid) === i, lit(off.underlying())).otherwise(e)
       }
-      val pw = Window.partitionBy(col("_grs_pid")).orderBy(order: _*)
+      val pw = Window.partitionBy(col(pid)).orderBy(order: _*)
       // the window-sum result type (e.g. Decimal(38,4) over a (28,4)
       // input) is what the single-window form produces — pin it
       val sumType = df.select(sum(value)
@@ -194,11 +198,11 @@ object Dist {
       p.withColumn(rankOut,
           row_number().over(pw).cast("long") + cntExpr)
         .withColumn(cumOut,
-          (sum(col("_grs_v")).over(pw.rowsBetween(
+          (sum(col(v)).over(pw.rowsBetween(
             Window.unboundedPreceding, Window.currentRow)) +
             sumExpr).cast(sumType))
         .withColumn(totalOut, lit(total.underlying()).cast(sumType))
-        .drop("_grs_pid", "_grs_v")
+        .drop(pid, v)
     }
   }
 }

@@ -233,13 +233,13 @@ trait LakeCommitCore { this: VersionedLake.type =>
     * writer-private staging directory beside the table, then adopt
     * every staged file under an immutable writer-nonced name
     * (`gbucket=N/w<nonce>-<i>.parquet`); returns the adopted relative
-    * paths. Staging never touches live data, no two writers can
-    * collide on a physical name, and a write that throws leaves no
-    * staging directory behind. Adopted files stay invisible until a
-    * manifest references them.
+    * paths and their footer statistics ([[computeStats]]). Staging
+    * never touches live data, no two writers can collide on a physical
+    * name, and a write that throws leaves no staging directory behind.
+    * Adopted files stay invisible until a manifest references them.
     */
   private[sources] def stageBuckets(spark: SparkSession, path: String,
-      df: DataFrame): Seq[String] = {
+      df: DataFrame): (Seq[String], Map[String, String]) = {
     val f = fs(spark)
     val wid = nonce()
     val stage = new Path(path + s"_stage_$wid")
@@ -259,7 +259,7 @@ trait LakeCommitCore { this: VersionedLake.type =>
         }
     }
     f.delete(stage, true)
-    adopted
+    (adopted, computeStats(spark, path, adopted))
   }
 
   /** Committed versions, ascending (empty → table does not exist). */
@@ -403,7 +403,7 @@ trait LakeCommitCore { this: VersionedLake.type =>
     * conservatively kept at prune time. DV'd rows may widen a file's
     * stored range beyond its live rows — also conservative.
     */
-  private[sources] def computeStats(spark: SparkSession, path: String,
+  private def computeStats(spark: SparkSession, path: String,
       adopted: Seq[String]): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._

@@ -165,10 +165,9 @@ trait LakeMaintenance { this: VersionedLake.type =>
     val clustered = df0.withColumn("_zkey", z)
       .repartitionByRange(nb * slicesPerBucket, col("gbucket"), col("_zkey"))
       .drop("_zkey")
-    val adopted = stageBuckets(spark, path, clustered)
+    val (adopted, stats) = stageBuckets(spark, path, clustered)
     commitPending(spark, path, PendingCommit(base, touched,
-      TableManifest(adopted, Map.empty,
-        stats = computeStats(spark, path, adopted)).lines,
+      TableManifest(adopted, Map.empty, stats = stats).lines,
       adopted, op = "OPTIMIZE"))
   }
 

@@ -176,11 +176,15 @@ trait LakeRefsChanges { this: VersionedLake.type =>
 
   /** DROP CONSTRAINT: remove the property as a metadata-only commit
     * ([[commitManifest]] — property changes never conflict with data
-    * writes).
+    * writes). A name the table does not have is refused inside the
+    * edit, as [[dropTag]] refuses: a silent no-op would leave the real
+    * (misspelled) constraint in force with no error.
     */
   def dropConstraint(spark: SparkSession, path: String,
       name: String): CommitResult =
     commitManifest(spark, path, "DROP_CONSTRAINT") { m =>
+      require(m.props.contains(s"constraint.$name"),
+        s"no constraint named $name at $path")
       m.copy(props = m.props - s"constraint.$name")
     }
 
@@ -581,11 +585,10 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     // bucket — the point of the exercise
     val df = loadWithDv(spark, path, files, m.dv, widen = widenMap(m))
       .repartition(col("gbucket"))
-    val adopted = stageBuckets(spark, path, df)
+    val (adopted, stats) = stageBuckets(spark, path, df)
     commitPending(spark, path,
       PendingCommit(base, touched,
-        TableManifest(adopted, Map.empty,
-          stats = computeStats(spark, path, adopted)).lines,
+        TableManifest(adopted, Map.empty, stats = stats).lines,
         adopted, op = "OPTIMIZE"))
   }
 
@@ -643,13 +646,12 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     val resolved =
       if (isTracked(m)) assignFreshRowIds(resolved0, keyColsP, rowIdHwm(m))
       else resolved0
-    val adopted = stageBuckets(spark, path,
+    val (adopted, stats) = stageBuckets(spark, path,
       resolved.repartition(col("gbucket")))
     val touched = (m.data.map(bucketOf) ++ adopted.map(bucketOf)).toSet
     commitPending(spark, path,
       PendingCommit(base, touched,
-        TableManifest(adopted, Map.empty,
-          stats = computeStats(spark, path, adopted)).lines ++
+        TableManifest(adopted, Map.empty, stats = stats).lines ++
           (if (isTracked(m)) Seq("prop\trowid.hwm\t" +
             adoptedMaxRowId(spark, path, adopted, rowIdHwm(m)))
           else Seq.empty),
@@ -680,10 +682,9 @@ trait LakeRefsChanges { this: VersionedLake.type =>
     val df = loadWithDv(spark, path, m.data, m.dv, widen = widenMap(m))
       .repartitionByRange(nb * slicesPerBucket,
         col("gbucket"), col(columnP))
-    val adopted = stageBuckets(spark, path, df)
+    val (adopted, stats) = stageBuckets(spark, path, df)
     commitPending(spark, path, PendingCommit(base, touched,
-      TableManifest(adopted, Map.empty,
-        stats = computeStats(spark, path, adopted)).lines,
+      TableManifest(adopted, Map.empty, stats = stats).lines,
       adopted, op = "OPTIMIZE"))
   }
 

@@ -141,12 +141,11 @@ trait LakeRowTracking { this: VersionedLake.type =>
       .withColumn("_row_id", row_number().over(
         Window.orderBy(col("_rel"), col("_pos"))).cast("long"))
       .drop("_rel", "_pos")
-    val adopted = stageBuckets(spark, path, df)
+    val (adopted, stats) = stageBuckets(spark, path, df)
     val touched = (m.data.map(bucketOf) ++ adopted.map(bucketOf)).toSet
     val hwm = adoptedMaxRowId(spark, path, adopted, 0L)
     commitPending(spark, path, PendingCommit(base, touched,
-      TableManifest(adopted, Map.empty,
-        stats = computeStats(spark, path, adopted)).lines ++
+      TableManifest(adopted, Map.empty, stats = stats).lines ++
         Seq("prop\trowTracking\ttrue", s"prop\trowid.hwm\t$hwm"),
       adopted, op = "ROW_TRACKING_BACKFILL"))
   }
@@ -266,7 +265,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
       if (tracked) assignFreshRowIds(merged0, keyColsP, rowIdHwm(prior))
         .repartition(col("gbucket"))
       else merged0
-    val adopted = stageBuckets(spark, path, merged)
+    val (adopted, stats) = stageBuckets(spark, path, merged)
     // ourLines = the touched buckets' complete new representation: the
     // adopted files, no DV lines (the rewrite materialized deletes).
     // Untouched-bucket lines are re-derived from whatever manifest the
@@ -277,10 +276,65 @@ trait LakeRowTracking { this: VersionedLake.type =>
       (if (tracked) Seq("prop\trowid.hwm\t" +
         adoptedMaxRowId(spark, path, adopted, rowIdHwm(prior))) else Seq.empty)
     PendingCommit(vs.lastOption.getOrElse(0), touched,
-      adopted ++ statsAsLines(computeStats(spark, path, adopted)) ++
-        propLines, adopted, metaExtra = expectMeta,
+      adopted ++ statsAsLines(stats) ++ propLines, adopted,
+      metaExtra = expectMeta,
       dropProps = if (tracked) Seq("rowid.hwm") else Nil)
     } finally if (wePersist) updates.unpersist(blocking = false)
+  }
+
+  /** Rewrite the buckets the keys of `changes` hash to, with content
+    * the caller derives — the commit path for merges whose resolution
+    * is not [[upsert]]'s per-key last writer (an SCD2 change rewrites
+    * its neighbours' validity windows). `rewrite` receives `changes`
+    * tagged with `gbucket` and the stored rows of those buckets at the
+    * tip (deletion vectors applied; None when they hold no file), and
+    * returns the buckets' complete new content, `gbucket` included.
+    * The output is staged through one bucket-keyed exchange (one file
+    * per bucket) and committed by [[commitPending]] with the touched
+    * buckets as the conflict granule. An output row in any other
+    * bucket fails the write, checked from the adopted file names
+    * without a job. Rows are read and written as stored, so a table
+    * with column mapping, constraints, expectations, generated columns
+    * or row tracking is refused.
+    */
+  def rewriteBuckets(spark: SparkSession, path: String, changes: DataFrame,
+      keyCols: Seq[String], numBuckets: Int = 16)(
+      rewrite: (DataFrame, Option[DataFrame]) => DataFrame): CommitResult = {
+    val vs = versions(spark, path)
+    val base = vs.lastOption.getOrElse(0)
+    val m = vs.lastOption.map(manifestEntries(spark, path, _))
+      .getOrElse(TableManifest(Seq.empty, Map.empty))
+    val managed = m.props.keys.filter(k => k == "rowTracking" ||
+      Seq("rename.", "dropped.", "constraint.", "expect.", "generated.")
+        .exists(k.startsWith))
+    require(managed.isEmpty, s"rewriteBuckets writes rows as stored; " +
+      s"$path has ${managed.toSeq.sorted.mkString(", ")}")
+    // `rewrite` buckets its own output rows, so it must hash with the
+    // table's modulus
+    require(m.numBuckets(numBuckets) == numBuckets, s"$path has " +
+      s"${m.numBuckets(numBuckets)} buckets, not $numBuckets")
+    val tagged = changes.withColumn("gbucket",
+      pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
+    val touched = distinctValues(tagged, "gbucket", Encoders.scalaInt)
+    if (touched.isEmpty) return CommitResult(base, 0)
+    val replaced = m.data.filter(rel => touched.contains(bucketOf(rel)))
+    val stored =
+      if (replaced.isEmpty) None
+      else Some(loadWithDv(spark, path, replaced, m.dv, widen = widenMap(m)))
+    val (adopted, stats) = stageBuckets(spark, path,
+      rewrite(tagged, stored).repartition(col("gbucket")))
+    val stray = adopted.map(bucketOf).toSet -- touched
+    if (stray.nonEmpty) {
+      val f = fs(spark)
+      adopted.foreach(rel => f.delete(new Path(s"$path/$rel"), false))
+      throw new IllegalStateException(s"rewriteBuckets at $path wrote " +
+        s"buckets ${stray.toSeq.sorted.mkString(",")} outside the " +
+        s"touched set ${touched.toSeq.sorted.mkString(",")}")
+    }
+    commitPending(spark, path, PendingCommit(base, touched,
+      adopted ++ statsAsLines(stats) ++
+        (if (vs.isEmpty) Seq(s"prop\tnumBuckets\t$numBuckets") else Nil),
+      adopted))
   }
 
   /** Phase 2: the commit loop for STAGED DATA written against a base
@@ -822,7 +876,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
       if (tracked) assignFreshRowIds(winners, keyCols2, rowIdHwm(m))
         .repartition(col("gbucket"))
       else winners
-    val appended = stageBuckets(spark, path, out)
+    val (appended, appendedStats) = stageBuckets(spark, path, out)
     if (dvOut.isEmpty && appended.isEmpty) return CommitResult(base, 0)
     val dvAffected = dvOut.map(_._2).getOrElse(Seq.empty)
     val touched = (dvAffected.map(bucketOf) ++ appended.map(bucketOf)).toSet
@@ -830,7 +884,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
       aff.map(_ -> rel)
     }
     val ourLines = TableManifest(m.data ++ appended, newDv,
-      stats = m.stats ++ computeStats(spark, path, appended)).lines
+      stats = m.stats ++ appendedStats).lines
       .filter(l => touched.contains(bucketOfLine(l))) ++
       (if (tracked) Seq("prop\trowid.hwm\t" +
         adoptedMaxRowId(spark, path, appended, rowIdHwm(m))) else Seq.empty)
@@ -865,12 +919,13 @@ trait LakeRowTracking { this: VersionedLake.type =>
     // otherwise rewrite N files into N files — r17, guide §6). Its
     // clean files are not rewritten; they carry by reference, so the
     // bucket holds the new file beside them
-    val adopted = stageBuckets(spark, path, df.repartition(col("gbucket")))
+    val (adopted, stats) =
+      stageBuckets(spark, path, df.repartition(col("gbucket")))
     val carriedStats = m.stats.view
       .filterKeys(cleanCarried.toSet).toMap
     commitPending(spark, path, PendingCommit(base, touched,
       TableManifest(cleanCarried ++ adopted, Map.empty,
-        stats = carriedStats ++ computeStats(spark, path, adopted)).lines,
+        stats = carriedStats ++ stats).lines,
       adopted, op = "OPTIMIZE"))
   }
 

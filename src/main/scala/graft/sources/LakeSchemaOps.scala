@@ -724,10 +724,12 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     if (keepPos) alive else alive.drop("_rel", "_pos")
   }
 
-  /** MERGE-style upsert committing a new version. Same contract as
-    * [[LakeWriter.upsert]] (keys + sequence, `_deleted` for deletes),
-    * but immutable-file/log-structured: untouched buckets' files carry
-    * over into the new manifest by reference, not by rewrite.
+  /** MERGE-style upsert committing a new version: rows in `updates`
+    * replace same-key rows by `seqCol` (last writer wins, updates win
+    * ties), unmatched keys append, and a `_deleted` boolean marks
+    * deletes, kept as tombstones. Immutable-file/log-structured:
+    * untouched buckets' files carry over into the new manifest by
+    * reference, not by rewrite.
     * [[prepare]] + [[commitPending]] under the hood, so every upsert
     * gets optimistic concurrency: a sequential caller wins the first
     * CAS; a racing caller auto-rebases when the winner's buckets are

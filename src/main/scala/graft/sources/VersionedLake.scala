@@ -28,10 +28,16 @@ import org.apache.spark.sql.functions._
   * manifest makes bucket→file resolution O(#files) metadata, no
   * directory listing), writes only touched buckets, and commits O(1)
   * files. The manifest is a full snapshot (O(#files) lines), so readers
-  * never replay a log chain. Same merge semantics as
-  * [[LakeWriter.upsert]]: last-writer-wins by sequence, DELETE
-  * tombstones retained so late-arriving older changes cannot resurrect
-  * a deleted key; readers filter tombstones.
+  * never replay a log chain. Merge semantics ([[upsert]]):
+  * last-writer-wins by sequence, DELETE tombstones retained so
+  * late-arriving older changes cannot resurrect a deleted key; readers
+  * filter tombstones.
+  *
+  * Both streaming CDC flows commit here: the SCD1 flow
+  * ([[graft.streaming.EventStreams.streamingScd1]]) through [[upsert]],
+  * the SCD2 history ([[graft.streaming.Scd2Apply]]) through
+  * [[rewriteBuckets]]; each vacuums to its newest version after every
+  * commit.
   */
 object VersionedLake
     extends LakeCommitCore with LakeSchemaOps with LakeRowTracking

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.sources.VersionedLake
 import graft.operators.Medallion.dsum
 
 /** Structured-Streaming operators over the events feed — the engine
@@ -180,11 +181,14 @@ object EventStreams {
   /** Streaming AUTO CDC SCD1: per-microbatch MERGE into the lake table —
     * the engine analogue of `CREATE FLOW … AS AUTO CDC INTO target …
     * STORED AS SCD TYPE 1` (ref cdc_customers_silver.sql:55-66). Each
-    * batch goes straight into [[graft.sources.LakeWriter.upsert]], whose
-    * one per-key window (sequence descending, updates winning ties)
-    * resolves the batch's own changes and the table's rows together, so
-    * the table converges to the same state as the batch SCD1 regardless
-    * of how the feed is chopped into batches.
+    * batch commits one version through
+    * [[graft.sources.VersionedLake.upsert]], whose one per-key window
+    * (sequence descending, updates winning ties) resolves the batch's
+    * own changes and the table's rows together, so the table converges
+    * to the same state as the batch SCD1 regardless of how the feed is
+    * chopped into batches. A batch that fails commits nothing. Each
+    * commit is followed by a vacuum to that version: the table keeps
+    * only its current state.
     *
     * @param feed streaming frame with key/seq/op columns
     */
@@ -197,9 +201,10 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // DELETE rows ride along as tombstone markers; the upsert's own
         // per-key window picks the latest change across batch and table
-        graft.sources.LakeWriter.upsert(batch.sparkSession, path,
+        VersionedLake.upsert(batch.sparkSession, path,
           batch.withColumn("_deleted", col(opCol) === "DELETE").drop(opCol),
           keys, seqCol)
+        VersionedLake.vacuum(batch.sparkSession, path, retainLast = 1)
         ()
       }
       .start()
@@ -358,9 +363,10 @@ object EventStreams {
     * a STREAM (ref cdc_customers_silver.sql:55-66 applies the change
     * feed continuously, not as a batch window pass): the staged change
     * feed is split into microbatches that arrive in ARBITRARY sequence
-    * order, each batch is merged into a lake table via the
-    * partition-pruned [[graft.sources.LakeWriter.upsert]], and the
-    * final table must equal the batch SCD1 resolution.
+    * order, each batch is merged into a versioned lake table by
+    * [[streamingScd1]] (one bucket-pruned [[VersionedLake.upsert]]
+    * commit per batch), and the final table must equal the batch SCD1
+    * resolution.
     *
     * This is the convergence proof for the sink's CDC semantics:
     * per-key max-sequence merge + delete tombstones make the result
@@ -390,7 +396,7 @@ object EventStreams {
       table, Seq("key_id"), "sequence_number", "operation", checkpoint)
     try q.processAllAvailable() finally q.stop()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(checkpoint))
-    graft.sources.LakeWriter.read(spark, table)
+    VersionedLake.read(spark, table)
       .select(col("key_id"), col("value"), col("props"),
         col("sequence_number").as("last_sequence"))
   }

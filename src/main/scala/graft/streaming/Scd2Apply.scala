@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.VersionedLake
 
 /** Streaming SCD TYPE 2 maintenance — the second half of the
   * reference's `AUTO CDC … STORED AS SCD TYPE 2` run as a STREAM (ref
@@ -21,8 +23,9 @@ import org.apache.spark.sql.functions._
   *
   *  1. hashes its keys to buckets (`pmod(hash(key), NB)`) — the
   *     touched set, ≤ NB ints through the driver;
-  *  2. reads ONLY those bucket partitions of the history table (the
-  *     table stores the resolved history PLUS the DELETE closer rows,
+  *  2. reads ONLY those buckets' live files, resolved from the tip
+  *     manifest of the history table — a [[VersionedLake]] table (it
+  *     stores the resolved history PLUS the DELETE closer rows,
   *     so the per-key change set is fully reconstructible: change =
   *     (key, op, value, props, seq=__start_at));
   *  3. splits the stored rows AT KEY GRAIN: rows of keys the batch
@@ -34,7 +37,11 @@ import org.apache.spark.sql.functions._
   *     anti-join against the batch's key set, never re-resolved —
   *     re-resolution cost is O(batch keys' history), not
   *     O(touched buckets' history));
-  *  4. dynamic-partition-OVERWRITES only the touched buckets.
+  *  4. commits the touched buckets' new content as ONE version
+  *     ([[VersionedLake.rewriteBuckets]]: one file per bucket, all
+  *     buckets atomically, bucket-granular conflict detection), then
+  *     vacuums to that version — the history keeps only its current
+  *     state.
   *
   * Cost per batch is O(batch keys' history + batch) resolution work
   * plus O(touched buckets) rewrite IO, never O(table): the
@@ -50,78 +57,60 @@ object Scd2Apply {
 
   // Bucket count is a TABLE property proportioned to key cardinality
   // (the rewrite term is O(touched buckets)); 16 suits the gate's ~1e5
-  // history rows — per-batch fixed cost (partition listing, dynamic-
-  // overwrite commit walk) scales with NB, so oversizing it buys
-  // nothing until the per-bucket history outgrows a task.
+  // history rows — per-batch fixed cost (staged files, footer stats,
+  // manifest lines) scales with NB, so oversizing it buys nothing
+  // until the per-bucket history outgrows a task.
   private[graft] val NB = 16
 
   /** One microbatch of staged changes into the history table. `nb` is
     * the table's bucket count (default: the gate's pinned [[NB]]; the
     * scale bench passes the production sizing — nb ∝ key cardinality —
-    * so per-bucket history stays constant as the table grows).
+    * so per-bucket history stays constant as the table grows). The
+    * first commit stamps it as a table property; a later call with a
+    * different `nb` is refused.
     */
   def applyBatch(spark: SparkSession, table: String,
       batch: DataFrame, nb: Int = NB): Unit = {
-    val tagged = batch
-      .withColumn("gbucket", pmod(hash(col("key_id")), lit(nb)))
-      .localCheckpoint(true) // one small batch, read thrice below
-    val touched = tagged.select(col("gbucket")).distinct()
-      .collect().map(_.getInt(0)) // ≤ NB ints
-    // Hadoop FileSystem FROM THE TABLE PATH (not FileSystem.get's
-    // default-scheme FS): the history table may live on any scheme,
-    // and a default-FS probe against (say) an s3a:// table would throw
-    // Wrong-FS instead of resolving
-    val tablePath = new org.apache.hadoop.fs.Path(table)
-    val fs = tablePath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val existingPaths =
-      if (!fs.exists(tablePath)) Seq.empty
-      else touched.map(b => s"$table/gbucket=$b")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p))).toSeq
-    // zero existing bucket dirs (first batch, or all-new buckets):
-    // spark.read.parquet() with no paths cannot infer a schema
-    // EAGERLY materialized because the key-grain split consumes it
-    // twice (semi and anti branches of the same write job): a lazy
-    // cache lets the branches race and re-list/re-read every touched
-    // bucket — the double scan, not the join work, is what shows up at
-    // bench grain. localCheckpoint pins the touched buckets' rows in
-    // the block manager once, before the write job plans.
-    val existing: Option[DataFrame] =
-      if (existingPaths.isEmpty) None
-      else Some(spark.read.option("basePath", table)
-        .parquet(existingPaths: _*).localCheckpoint(true))
-    val batchKeys = tagged.select(col("key_id")).distinct()
-    // key-grain pruning: only rows of BATCH keys enter re-resolution;
-    // same-bucket rows of other keys are copied through untouched
-    val carryOver = existing.map(
-      _.join(broadcast(batchKeys), Seq("key_id"), "left_anti"))
-    val storedChanges = existing.map(
-      _.join(broadcast(batchKeys), Seq("key_id"), "left_semi")
-        .select(col("key_id"), col("operation"), col("value"),
-          col("props"), col("__start_at").as("sequence_number"),
-          col("gbucket")))
-    val batchChanges = tagged.select(
-      col("key_id"), col("operation"), col("value"), col("props"),
-      col("sequence_number"), col("gbucket"))
-    val allChanges = storedChanges
-      .map(_.unionByName(batchChanges)).getOrElse(batchChanges)
-      .dropDuplicates("key_id", "sequence_number") // replay-idempotent
-    val resolved = graft.operators.Cdc.scd2FromStaged(
-        allChanges.drop("gbucket"))
-      .withColumn("gbucket", pmod(hash(col("key_id")), lit(nb)))
-    val out = carryOver
-      .map(c => resolved.unionByName(c.select(resolved.columns.map(col): _*)))
-      .getOrElse(resolved)
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("gbucket").parquet(table)
+    val changes = batch.localCheckpoint(true) // one small batch, read thrice
+    VersionedLake.rewriteBuckets(spark, table, changes, Seq("key_id"), nb) {
+      (tagged, stored) =>
+        // EAGERLY materialized because the key-grain split consumes it
+        // twice (semi and anti branches of the same write job): a lazy
+        // cache lets the branches race and re-read every touched
+        // bucket — the double scan, not the join work, is what shows
+        // up at bench grain. localCheckpoint pins the touched buckets'
+        // rows in the block manager once, before the write job plans.
+        val existing = stored.map(_.localCheckpoint(true))
+        val batchKeys = tagged.select(col("key_id")).distinct()
+        // key-grain pruning: only rows of BATCH keys enter re-resolution;
+        // same-bucket rows of other keys are copied through untouched
+        val carryOver = existing.map(
+          _.join(broadcast(batchKeys), Seq("key_id"), "left_anti"))
+        val storedChanges = existing.map(
+          _.join(broadcast(batchKeys), Seq("key_id"), "left_semi")
+            .select(col("key_id"), col("operation"), col("value"),
+              col("props"), col("__start_at").as("sequence_number"),
+              col("gbucket")))
+        val batchChanges = tagged.select(
+          col("key_id"), col("operation"), col("value"), col("props"),
+          col("sequence_number"), col("gbucket"))
+        val allChanges = storedChanges
+          .map(_.unionByName(batchChanges)).getOrElse(batchChanges)
+          .dropDuplicates("key_id", "sequence_number") // replay-idempotent
+        val resolved = graft.operators.Cdc.scd2FromStaged(
+            allChanges.drop("gbucket"))
+          .withColumn("gbucket", pmod(hash(col("key_id")), lit(nb)))
+        carryOver.map(c =>
+            resolved.unionByName(c.select(resolved.columns.map(col): _*)))
+          .getOrElse(resolved)
+    }
+    // the history keeps only its current state: superseded files go now
+    VersionedLake.vacuum(spark, table, retainLast = 1)
   }
 
   /** Consumer view: the maintained history minus the DELETE closers. */
   def readHistory(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(table)
-      .filter(col("operation") =!= "DELETE")
-      .drop("gbucket")
+    VersionedLake.read(spark, table).filter(col("operation") =!= "DELETE")
 
   def streamScd2Apply(spark: SparkSession, dir: String): DataFrame = {
     val checkpoint = Files.createTempDirectory("graft_scd2a_ckpt").toString

@@ -71,6 +71,39 @@ class AutoCdcSpec extends AnyFunSuite {
     assert(streamed.toSeq == Seq((1L, "a3"), (2L, "b3")))
   }
 
+  test("a micro-batch whose write throws leaves the table at its prior state") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_autocdc_fail").toString
+    val path = s"$dir/t"
+    // a generated column that raises for id 9: the batch's bucket
+    // collect never evaluates it, so the staged write itself fails
+    // (adaptive execution off, so the write job, not an earlier
+    // exchange job, is the one that fails — after staging began)
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    val mem = MemoryStream[Chg]
+    val q = try streaming.EventStreams.streamingScd1(
+      mem.toDF(), path, Seq("id"), "seq", "op", s"$dir/ckpt")
+      finally spark.conf.set(aqe, prev)
+    val before = try {
+      mem.addData(feed)
+      q.processAllAvailable()
+      sources.VersionedLake.addGeneratedColumn(spark, path, "g",
+        "CASE WHEN id = 9 THEN raise_error('boom') ELSE id * 2 END")
+      val rows = sources.LakeWriter.read(spark, path).collect().toSet
+      mem.addData(Chg(1, 4, "UPDATE", "a4"), Chg(9, 1, "INSERT", "i1"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      rows
+    } finally q.stop()
+    assert(sources.LakeWriter.read(spark, path).collect().toSet == before)
+    val left = new java.io.File(dir).list().filter(_.startsWith("t_"))
+    assert(left.isEmpty, s"left behind: ${left.mkString(", ")}")
+  }
+
   test("generated adversarial feed resolves per the tie-break contract") {
     val rows = operators.CdcGen.convergence(spark).collect()
       .map(r => r.getAs[Long]("key_id") ->

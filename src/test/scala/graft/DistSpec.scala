@@ -112,6 +112,36 @@ class DistSpec extends AnyFunSuite {
     assert(h == 1L && t == 2L)
   }
 
+  test("globalRowNumber and globalNtile keep an input column named _grn_pid") {
+    val rows = (1L to 97L).map(i => (i, i * 31 % 1009, i % 5))
+    val df = rows.toDF("a", "b", "_grn_pid").repartition(5)
+    val order = Seq(col("b"), col("a"))
+    val rn = Dist.globalRowNumber(df, order, 8, "rn")
+    assert(Dist.multisetEqual(rn, df.withColumn("rn",
+      row_number().over(Window.orderBy(order: _*)).cast("long"))))
+    val q = Dist.globalNtile(df, order, 4, 8, "q")
+    assert(Dist.multisetEqual(q, df.withColumn("q",
+      ntile(4).over(Window.orderBy(order: _*)))))
+  }
+
+  test("globalRunningSum keeps an input column named _grs_v") {
+    import org.apache.spark.sql.types.DecimalType
+    val df = (1L to 97L).map(i => (i, BigDecimal(i * 7919 % 1000) / 10))
+      .toDF("k", "v0")
+      .withColumn("_grs_v", col("v0").cast(DecimalType(18, 2))).drop("v0")
+      .repartition(5)
+    val order = Seq(col("_grs_v").desc, col("k"))
+    val byV = Window.orderBy(order: _*)
+    val slow = df
+      .withColumn("rnk", row_number().over(byV).cast("long"))
+      .withColumn("cum", sum(col("_grs_v")).over(
+        byV.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("total", sum(col("_grs_v")).over(Window.partitionBy()))
+    val fast = Dist.globalRunningSum(df, order, col("_grs_v"), 8,
+      "rnk", "cum", "total")
+    assert(Dist.multisetEqual(fast, slow))
+  }
+
   test("hitsAndTotal == intersect().count() + truth.count()") {
     val out = Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("p", "n")
     val truth = Seq((1L, 10L), (2L, 10L), (2L, 12L)).toDF("p", "n")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Skew
-import graft.sources.LakeWriter
+import graft.sources.{LakeWriter, VersionedLake}
 
 class LakeSpec extends AnyFunSuite {
   import TestSpark._
@@ -48,115 +48,52 @@ class LakeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_lake").toString + "/t2"
     val base = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
       .toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, base, Seq("id"), "seq")
+    VersionedLake.upsert(spark, dir, base, Seq("id"), "seq")
     val upd = Seq((2L, "b2", 2L, false), (3L, "c", 2L, true), (4L, "d", 2L, false))
       .toDF("id", "payload", "seq", "_deleted")
-    LakeWriter.upsert(spark, dir, upd, Seq("id"), "seq")
+    VersionedLake.upsert(spark, dir, upd, Seq("id"), "seq")
     val out = LakeWriter.read(spark, dir).orderBy("id").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload")))
     assert(out.toSeq == Seq((1L, "a"), (2L, "b2"), (4L, "d")))
     // tombstone semantics: a late update with an OLDER sequence must not
     // resurrect the deleted key
     val late = Seq((3L, "c-late", 1L, false)).toDF("id", "payload", "seq", "_deleted")
-    LakeWriter.upsert(spark, dir, late, Seq("id"), "seq")
+    VersionedLake.upsert(spark, dir, late, Seq("id"), "seq")
     val ids = LakeWriter.read(spark, dir).select("id")
       .collect().map(_.getLong(0)).toSet
     assert(!ids.contains(3L), "late stale update resurrected a deleted key")
   }
 
-  test("crashed swap: read serves the backup without mutating; write repairs") {
+  test("crashed compact swap: the next compact restores the backup") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lake").toString + "/t2c"
-    val base = Seq((1L, "a", 1L)).toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, base, Seq("id"), "seq")
+    (1 to 100).toDF("x").repartition(4).write.parquet(dir)
     // simulate a crash between moving the live dir aside and moving the
-    // staged dir in: only path_old exists
+    // compacted dir in: only path_old exists
     val f = new java.io.File(dir)
     val old = new java.io.File(dir + "_old")
     assert(f.renameTo(old))
-    // a reader must serve the backup and must NOT rename anything
-    // (renaming would race a concurrent writer mid-swap)
-    assert(LakeWriter.read(spark, dir).count() == 1)
-    assert(old.exists() && !f.exists(), "read() mutated the directory layout")
-    // the next write repairs the layout and applies its merge
-    val upd = Seq((2L, "b", 2L)).toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, upd, Seq("id"), "seq")
-    assert(f.exists())
-    assert(LakeWriter.read(spark, dir).count() == 2)
+    // the next compact restores the backup, then compacts it
+    LakeWriter.compact(spark, dir, 1)
+    assert(f.exists() && !old.exists())
+    assert(f.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    assert(spark.read.parquet(dir).count() == 100)
   }
 
-  test("pruned merge rewrites only touched buckets; untouched are byte-identical") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_lake").toString + "/t5"
-    val base = (1L to 200L).map(i => (i, s"p$i", 1L)).toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, base, Seq("id"), "seq", numBuckets = 8)
-    def snapshot(): Map[String, Seq[Byte]] = {
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("gbucket=")).flatMap { d =>
-          d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-            (d.getName + "/" + f.getName) ->
-              java.nio.file.Files.readAllBytes(f.toPath).toSeq
-          }
-        }.toMap
-    }
-    val before = snapshot()
-    assert(before.keys.map(_.split("/")(0)).toSet.size > 1,
-      "seed did not spread keys over multiple buckets")
-    LakeWriter.upsert(spark, dir,
-      Seq((7L, "p7-new", 2L)).toDF("id", "payload", "seq"),
-      Seq("id"), "seq", numBuckets = 8)
-    val after = snapshot()
-    // a file is "changed" if its name vanished or its bytes differ; a
-    // single-key merge must confine every change to that key's bucket
-    val changedBuckets = (before.keySet ++ after.keySet)
-      .filter(k => before.get(k) != after.get(k))
-      .map(_.split("/")(0))
-    assert(changedBuckets.nonEmpty, "merge rewrote nothing")
-    assert(changedBuckets.size == 1,
-      s"single-key merge touched multiple buckets: $changedBuckets")
-    val out = LakeWriter.read(spark, dir).orderBy("id").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload")))
-    assert(out.length == 200 && out.contains((7L, "p7-new")))
-    // the merge-side read prunes partitions at the scan
-    val pruned = spark.read.parquet(dir)
-      .filter(col("gbucket").isin(changedBuckets.head.split("=")(1).toInt))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("gbucket"),
-      s"bucket filter not pushed to partition pruning:\n$plan")
-  }
-
-  test("upsert evolves schema: new column appears, old rows read as null") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_lake").toString + "/t7"
-    val base = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, base, Seq("id"), "seq")
-    // updates carry a column the table has never seen
-    val upd = Seq((2L, "b2", 2L, "extra2"), (3L, "c", 2L, "extra3"))
-      .toDF("id", "payload", "seq", "note")
-    LakeWriter.upsert(spark, dir, upd, Seq("id"), "seq")
-    val out = LakeWriter.read(spark, dir).orderBy("id").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("payload"),
-        Option(r.getAs[String]("note"))))
-    assert(out.toSeq == Seq((1L, "a", None), (2L, "b2", Some("extra2")),
-      (3L, "c", Some("extra3"))))
-  }
-
-  test("compact preserves the bucket layout of an upsert table") {
+  test("compact preserves the partition layout of a partitioned directory") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lake").toString + "/t6"
-    val base = (1L to 100L).map(i => (i, s"p$i", 1L)).toDF("id", "payload", "seq")
-    LakeWriter.upsert(spark, dir, base, Seq("id"), "seq", numBuckets = 4)
+    val df = (1 to 100).map(i => (i, s"p${i % 4}")).toDF("id", "p")
+    df.repartition(8).write.partitionBy("p").parquet(dir)
     LakeWriter.compact(spark, dir, 2)
-    val buckets = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("gbucket=")).map(_.getName).toSet
-    assert(buckets.size == 4, s"compact flattened the bucket layout: $buckets")
-    assert(LakeWriter.read(spark, dir).count() == 100)
-    // a post-compact merge still works against the compacted layout
-    LakeWriter.upsert(spark, dir,
-      Seq((5L, "p5-new", 2L)).toDF("id", "payload", "seq"),
-      Seq("id"), "seq", numBuckets = 4)
-    val out = LakeWriter.read(spark, dir).filter(col("id") === 5L).head()
-    assert(out.getAs[String]("payload") == "p5-new")
+    val parts = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("p=")).map(_.getName).toSet
+    assert(parts.size == 4, s"compact flattened the partition layout: $parts")
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("p="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(files.forall(_ == 1), s"files per partition: ${files.toSeq}")
+    assert(spark.read.parquet(dir).count() == 100)
   }
 
   test("compact reduces file count") {

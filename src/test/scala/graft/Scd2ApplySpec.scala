@@ -94,4 +94,27 @@ class Scd2ApplySpec extends AnyFunSuite {
       s"untouched key $k2 in the touched bucket was altered")
     assert(rowsOf(1L).size == 2, "the batch key was not re-resolved")
   }
+
+  test("three batches leave one live file per bucket and one version") {
+    val table = graft.sources.Scratch.dir("scd2a_spec5")
+    val keys = 1L to 200L
+    Scd2Apply.applyBatch(spark, table,
+      chg(keys.map(k => (k, "INSERT", k.toDouble, 10L)): _*))
+    Scd2Apply.applyBatch(spark, table,
+      chg(keys.filter(_ % 2 == 0).map(k => (k, "UPDATE", -1.0, 30L)): _*))
+    // out of order: lands between the two earlier versions
+    Scd2Apply.applyBatch(spark, table,
+      chg(keys.filter(_ % 4 == 0).map(k => (k, "UPDATE", -2.0, 20L)): _*))
+    val dirs = new java.io.File(table).listFiles()
+      .filter(_.getName.startsWith("gbucket="))
+    assert(dirs.length == Scd2Apply.NB, dirs.map(_.getName).toSeq.sorted)
+    val perBucket = dirs.map(d =>
+      d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(perBucket.values.forall(_ == 1), perBucket.toSeq.sorted.toString)
+    assert(graft.sources.VersionedLake.versions(spark, table).size == 1)
+    val h = hist(table)
+    assert(h.size == 200 + 100 + 50)
+    assert(h.filter(_._1 == 4L) == Seq((4L, 4.0, 10L, Some(20L), false),
+      (4L, -2.0, 20L, Some(30L), false), (4L, -1.0, 30L, None, true)))
+  }
 }

@@ -537,6 +537,54 @@ class VersionedLakeSpec extends AnyFunSuite {
       .collect().sorted.toSeq == Seq(1L, 3L, 4L, 5L, 6L))
   }
 
+  test("DROP CONSTRAINT of a name the table does not have is refused") {
+    val path = graft.sources.Scratch.dir("vlake_ck_drop")
+    VersionedLake.upsert(spark, path,
+      Seq((1L, "a", 1L)).toDF("k", "x", "seq"), Seq("k"), "seq",
+      numBuckets = 2)
+    VersionedLake.addConstraint(spark, path, "x_present", "x IS NOT NULL")
+    val tip = VersionedLake.versions(spark, path).last
+    intercept[IllegalArgumentException] {
+      VersionedLake.dropConstraint(spark, path, "x_presnet")
+    }
+    assert(VersionedLake.versions(spark, path).last == tip)
+    // the real constraint is still enforced
+    intercept[VersionedLake.ConstraintViolation] {
+      VersionedLake.upsert(spark, path,
+        Seq((2L, null: String, 2L)).toDF("k", "x", "seq"), Seq("k"), "seq")
+    }
+  }
+
+  test("rewriteBuckets refuses output rows outside the touched buckets") {
+    val path = graft.sources.Scratch.dir("vlake_rewrite")
+    VersionedLake.rewriteBuckets(spark, path,
+      (1L to 40L).map(i => (i, s"a$i", i)).toDF("k", "x", "seq"),
+      Seq("k"), numBuckets = 4) { (tagged, stored) =>
+      assert(stored.isEmpty); tagged
+    }
+    val one = Seq((1L, "b1", 50L)).toDF("k", "x", "seq")
+    val e = intercept[IllegalStateException] {
+      VersionedLake.rewriteBuckets(spark, path, one, Seq("k"),
+        numBuckets = 4) { (tagged, _) =>
+        tagged.withColumn("gbucket", pmod(col("gbucket") + 1, lit(4)))
+      }
+    }
+    assert(e.getMessage.contains("outside the touched set"), e.getMessage)
+    assert(VersionedLake.versions(spark, path) == Seq(1))
+    assert(state(path, None) == (1L to 40L).map(i => Row3(i, s"a$i", i)))
+    // the refused write's adopted files are deleted
+    val files = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("gbucket="))
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    assert(files.length == VersionedLake.resolvedManifest(spark, path, 1)
+      .count(_.startsWith("gbucket=")))
+    // the output is bucketed by the caller, so the modulus must match
+    intercept[IllegalArgumentException] {
+      VersionedLake.rewriteBuckets(spark, path, one, Seq("k"),
+        numBuckets = 8)((tagged, _) => tagged)
+    }
+  }
+
   test("shallow clone: zero-copy fork, isolated divergence, links outlive vacuum") {
     val src = graft.sources.Scratch.dir("vlake_clspec_s")
     val dst = graft.sources.Scratch.dir("vlake_clspec_d")
