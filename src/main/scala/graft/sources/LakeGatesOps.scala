@@ -467,8 +467,8 @@ trait LakeGatesOps { this: VersionedLake.type =>
   /** POINT LOOKUP as a gate row: over a 64-bucket table carrying both
     * MOR appends and DVs, [[readKeys]] serves a sparse key set
     * (`key_id % 11 = 0`) while scanning STRICTLY FEWER files than the
-    * snapshot holds (`scan_pruned`, computed from the same manifest
-    * arithmetic the reader uses). Rows hash-match the oracle's
+    * snapshot holds (`scan_pruned`, computed by the reader's own
+    * [[keyBuckets]] over the manifest). Rows hash-match the oracle's
     * filtered SCD1 state — deletes honored, stale versions invisible.
     */
   def pointLookup(spark: SparkSession, sfDir: String): DataFrame = {
@@ -488,11 +488,9 @@ trait LakeGatesOps { this: VersionedLake.type =>
     val lookup = staged.select(col("key_id")).distinct()
       .filter(col("key_id") % 11 === 0).localCheckpoint(true)
     val m = manifestEntries(spark, path, versions(spark, path).last)
-    val nb = m.numBuckets(64)
-    val keyBuckets = lookup
-      .select(pmod(hash(col("key_id")), lit(nb)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val scanned = m.data.count(rel => keyBuckets.contains(bucketOf(rel)))
+    val buckets =
+      keyBuckets(spark, path, m, lookup, Seq("key_id")).map(_._1).toSet
+    val scanned = m.data.count(rel => buckets.contains(bucketOf(rel)))
     val pruned = scanned < m.data.size
     readKeys(spark, path, lookup, Seq("key_id"))
       .select(col("key_id"), col("value"), col("props"),

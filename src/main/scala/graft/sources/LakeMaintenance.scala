@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import LakeModel._
@@ -296,28 +296,42 @@ trait LakeMaintenance { this: VersionedLake.type =>
     * keys against a 100 TB table scans ≤ k shards — manifest-resolved,
     * no directory listing, no full scan. DVs and tombstones are
     * honored exactly as in [[read]].
+    *
+    * The keys come to the driver: [[keyBuckets]] collects them once
+    * (no job for a local frame, one otherwise), casts them to the
+    * table's stored key types, drops null and repeated keys and hashes
+    * each one to its bucket. A broadcast semi-join would bring the
+    * same keys to the driver. The candidate files are then scanned
+    * under one `isin` predicate on the key column, or on the struct of
+    * the key columns for a composite key. So a lookup costs one scan
+    * job, plus one job when its files carry DVs, with no join and no
+    * exchange.
     */
   def readKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCols: Seq[String], asOfVersion: Option[Int] = None): DataFrame = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = asOfVersion.getOrElse(vs.last)
+    require(vs.contains(v), s"version $v not in $vs (vacuumed or never committed)")
     val m = manifestEntries(spark, path, v)
-    val nb = m.numBuckets(16)
     // callers speak logical names; files and the bucket hash use the
     // pinned physical names
     val keyColsP = keyCols.map(toPhysicalName(m, _))
-    val keysP = toPhysicalDf(keys, m)
-    val keyBuckets = keysP
-      .select(pmod(hash(keyColsP.map(col): _*), lit(nb)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet // ≤ |keys| ints
-    val candidates = m.data.filter(rel => keyBuckets.contains(bucketOf(rel)))
-    if (candidates.isEmpty)
-      return read(spark, path, asOfVersion).filter(lit(false))
-    val df0 = loadWithDv(spark, path, candidates, m.dv,
-        widen = widenMap(m))
-      .join(keysP.select(keyColsP.map(col): _*).distinct(), keyColsP,
-        "left_semi")
+    val wanted = keyBuckets(spark, path, m, toPhysicalDf(keys, m), keyColsP)
+    val buckets = wanted.map(_._1).toSet
+    val candidates = m.data.filter(rel => buckets.contains(bucketOf(rel)))
+    if (candidates.isEmpty) return read(spark, path, Some(v)).filter(lit(false))
+    val scanned = loadWithDv(spark, path, candidates, m.dv,
+      widen = widenMap(m))
+    // one predicate on the key, or on the struct of a composite key
+    def key(parts: Seq[Column]) =
+      if (parts.size == 1) parts.head
+      else struct(parts.zip(keyColsP).map { case (p, c) => p.as(c) }: _*)
+    val types = scanned.select(keyColsP.map(col): _*).schema.map(_.dataType)
+    val lits = wanted.map { case (_, r) =>
+      key(types.zipWithIndex.map { case (t, i) => lit(r.get(i)).cast(t) })
+    }
+    val df0 = scanned.filter(key(keyColsP.map(col)).isin(lits: _*))
       .drop("gbucket")
     val live =
       if (df0.columns.contains("_deleted"))

@@ -218,9 +218,9 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val keyColsP = keyCols.map(toPhysicalName(prior0, _))
     val seqColP = toPhysicalName(prior0, seqCol)
     val tagged0 = updatesP.withColumn("_is_update", lit(1))
-    val tagged = (if (tagged0.columns.contains("_deleted")) tagged0
-      else tagged0.withColumn("_deleted", lit(false)))
-      .withColumn("gbucket", pmod(hash(keyColsP.map(col): _*), lit(buckets)))
+    val tagged = withKeyBucket(spark, path, prior0,
+      if (tagged0.columns.contains("_deleted")) tagged0
+      else tagged0.withColumn("_deleted", lit(false)), keyColsP, buckets)
     // gbucket is a function of the key, so (gbucket, key) groups as
     // the key alone does — and the bucket-keyed exchange below already
     // satisfies it, leaving the window no exchange of its own
@@ -313,8 +313,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
     // table's modulus
     require(m.numBuckets(numBuckets) == numBuckets, s"$path has " +
       s"${m.numBuckets(numBuckets)} buckets, not $numBuckets")
-    val tagged = changes.withColumn("gbucket",
-      pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
+    val tagged = withKeyBucket(spark, path, m, changes, keyCols, numBuckets)
     val touched = distinctValues(tagged, "gbucket", Encoders.scalaInt)
     if (touched.isEmpty) return CommitResult(base, 0)
     val replaced = m.data.filter(rel => touched.contains(bucketOf(rel)))
@@ -620,14 +619,16 @@ trait LakeRowTracking { this: VersionedLake.type =>
     // callers speak logical names; files store the pinned physical ones
     val deleteKeysP = toPhysicalDf(deleteKeys, m)
     val keyColsP = keyCols.map(toPhysicalName(m, _))
+    val keysB = withKeyBucket(spark, path, m,
+      deleteKeysP.select(keyColsP.map(col): _*), keyColsP,
+      m.numBuckets(numBuckets), lookup = true)
     // BUCKET PRUNING: the keys' hash buckets bound which files can
     // hold their rows — the position scan reads only those, so a
     // trickle delete against a 100 TB table scans the touched shards,
     // not the table (≤ numBuckets ints through the driver)
-    val keyBuckets = distinctValues(deleteKeysP
-      .select(pmod(hash(keyColsP.map(col): _*),
-        lit(m.numBuckets(numBuckets))).as("b")), "b", Encoders.scalaInt)
-    val candidates = m.data.filter(rel => keyBuckets.contains(bucketOf(rel)))
+    val touchedBuckets = distinctValues(keysB, "gbucket", Encoders.scalaInt)
+    val candidates =
+      m.data.filter(rel => touchedBuckets.contains(bucketOf(rel)))
     if (candidates.isEmpty) return CommitResult(base, 0)
     // the keys' CURRENT rows (already-deleted positions are excluded
     // by loadWithDv; re-marking them would be harmless) — one scan
@@ -635,8 +636,7 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val snap = loadWithDv(spark, path, candidates, m.dv, keepPos = true,
       widen = widenMap(m))
     val doomed = snap
-      .join(deleteKeysP.select(keyColsP.map(col): _*).distinct(),
-        keyColsP, "left_semi")
+      .join(keysB.drop("gbucket").distinct(), keyColsP, "left_semi")
       .localCheckpoint(true)
     val hits = doomed
       .select(col("_rel").as("file_rel"), col("_pos").as("pos"))
@@ -822,10 +822,10 @@ trait LakeRowTracking { this: VersionedLake.type =>
     val updatesP = toPhysicalDf(applyGenerated(m, updatesE), m)
     val keyCols2 = keyCols.map(toPhysicalName(m, _))
     val seqCol2 = toPhysicalName(m, seqCol)
-    val tagged = (if (updatesP.columns.contains("_deleted")) updatesP
-      else updatesP.withColumn("_deleted", lit(false)))
-      .withColumn("gbucket", pmod(hash(keyCols2.map(col): _*),
-        lit(m.numBuckets(numBuckets))))
+    val tagged = withKeyBucket(spark, path, m,
+      if (updatesP.columns.contains("_deleted")) updatesP
+      else updatesP.withColumn("_deleted", lit(false)),
+      keyCols2, m.numBuckets(numBuckets))
     // winner per key WITHIN the batch (same resolve as upsert), grouped
     // inside the commit's one bucket-keyed exchange
     val wInner = Window.partitionBy((col("gbucket") +: keyCols2.map(col)): _*)

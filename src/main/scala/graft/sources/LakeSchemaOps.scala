@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import LakeModel._
@@ -669,6 +669,43 @@ trait LakeSchemaOps { this: VersionedLake.type =>
     else Some(StructType(h.fields.indices.map(i =>
       h.fields(i).copy(nullable = schemas.exists(_.fields(i).nullable)))))
   }
+
+  /** `df` with its key columns cast to the table's STORED key types and
+    * their bucket as `gbucket`: `pmod(hash(keys), nb)`, for every keyed
+    * write and read that must find stored rows by key. Murmur3 hashes
+    * an INT and a BIGINT of the same value differently, so the caller's
+    * key types must not choose the bucket. The stored types come from a
+    * data file's cached footer schema, with no job; a table with no
+    * data file yet keeps the caller's types. A `lookup` takes a key
+    * its stored type cannot hold to null, which matches no row; a write
+    * casts, which raises on such a key under ANSI mode.
+    */
+  private[sources] def withKeyBucket(spark: SparkSession, path: String,
+      m: TableManifest, df: DataFrame, keyColsP: Seq[String], nb: Int,
+      lookup: Boolean = false): DataFrame = {
+    val stored = m.data.headOption.toSeq
+      .flatMap(rel => FooterSchemas.of(spark, s"$path/$rel").fields)
+    keyColsP.foldLeft(df) { (d, c) =>
+      stored.find(_.name.equalsIgnoreCase(c)).fold(d)(f => d.withColumn(c,
+        if (lookup) col(c).try_cast(f.dataType) else col(c).cast(f.dataType)))
+    }.withColumn("gbucket", pmod(hash(keyColsP.map(col): _*), lit(nb)))
+  }
+
+  /** The distinct non-null keys of `keys` (physical names), cast to the
+    * table's stored key types, each with its bucket from
+    * [[withKeyBucket]]: collected to the driver in one job, and in none
+    * for a local frame, whose projection the optimizer evaluates on the
+    * driver.
+    */
+  private[sources] def keyBuckets(spark: SparkSession, path: String,
+      m: TableManifest, keys: DataFrame,
+      keyColsP: Seq[String]): Seq[(Int, Row)] =
+    withKeyBucket(spark, path, m, keys.select(keyColsP.map(col): _*),
+      keyColsP, m.numBuckets(16), lookup = true)
+      .select((col("gbucket") +: keyColsP.map(col)): _*).collect().toSeq
+      .filter(r => (1 to keyColsP.size).forall(!r.isNullAt(_)))
+      .map(r => r.getInt(0) -> Row.fromSeq(r.toSeq.tail))
+      .distinct
 
   private[sources] def loadWithDv(spark: SparkSession, path: String,
       dataFiles: Seq[String], dv: Map[String, String],

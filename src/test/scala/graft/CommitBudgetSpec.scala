@@ -135,6 +135,64 @@ class CommitBudgetSpec extends AnyFunSuite {
     }
   }
 
+  /** The benchmark's lookup shape: 32 keys in a local frame, some of
+    * them absent from the table.
+    */
+  private def lookupKeys: Seq[Long] =
+    (0L until 32L).map(i => i * 331 % (TableKeys + 500))
+
+  private def lookupRows(df: DataFrame): Seq[(Long, Double, Long)] =
+    df.select("k", "v", "seq").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq.sorted
+
+  private def lookupWithin(path: String, budget: Int): Unit = {
+    import spark.implicits._
+    val keys = lookupKeys
+    val (got, jobs) = jobsOf(lookupRows(VersionedLake.readKeys(spark, path,
+      keys.toDF("k"), Seq("k"))))
+    assert(jobs <= budget, s"32-key lookup ran $jobs Spark jobs (budget $budget)")
+    assert(got.nonEmpty)
+    assert(got == lookupRows(VersionedLake.read(spark, path)
+      .filter(col("k").isin(keys: _*))))
+  }
+
+  test("32-key lookup on the 4-bucket table: at most 1 job") {
+    lookupWithin(table("budget_lookup"), 1)
+  }
+
+  test("32-key lookup on a table whose files carry DVs: at most 3 jobs") {
+    val path = table("budget_lookup_dv")
+    VersionedLake.dvUpsert(spark, path, trickle("budget_lookup_dv", 30L),
+      Seq("k"), "seq", Buckets)
+    val m = VersionedLake.resolvedManifest(spark, path,
+      VersionedLake.versions(spark, path).last)
+    assert(m.exists(_.startsWith("dv\t")), "fixture carries no DVs")
+    lookupWithin(path, 3)
+  }
+
+  test("two-column-key lookup returns what read + filter returns") {
+    import spark.implicits._
+    val path = graft.sources.Scratch.dir("budget_lookup_pair")
+    VersionedLake.upsert(spark, path,
+      (0L until 400L).map(i => (i % 20, s"r${i / 20}", i.toDouble, 1L))
+        .toDF("a", "b", "v", "seq"), Seq("a", "b"), "seq", Buckets)
+    VersionedLake.dvDelete(spark, path, Seq((3L, "r4")).toDF("a", "b"),
+      Seq("a", "b"), Buckets)
+    // hits, a deleted key, absent keys, a null part and a repeat
+    val keys = Seq[(java.lang.Long, String)]((1L, "r2"), (3L, "r4"),
+      (7L, "r19"), (7L, "r20"), (25L, "r1"), (null, "r3"), (1L, "r2"))
+    val (got, jobs) = jobsOf(VersionedLake.readKeys(spark, path,
+      keys.toDF("a", "b"), Seq("a", "b")).select("a", "b", "v").as[(Long,
+      String, Double)].collect().toSeq.sorted)
+    val want = VersionedLake.read(spark, path)
+      .filter(keys.filter(_._1 != null)
+        .map { case (a, b) => col("a") === a && col("b") === b }.reduce(_ || _))
+      .select("a", "b", "v").as[(Long, String, Double)].collect().toSeq.sorted
+    assert(got == want && got.map(k => (k._1, k._2)) == Seq((1L, "r2"),
+      (7L, "r19")), s"got $got, want $want")
+    assert(jobs <= 3, s"two-column lookup ran $jobs Spark jobs")
+  }
+
   test("compactDvs rewrites each DV-carrying bucket into one file") {
     import spark.implicits._
     // position deletes only: every bucket's one file carries a DV

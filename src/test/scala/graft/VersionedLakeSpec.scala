@@ -686,6 +686,81 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(v1 == Seq(11L), "time-travel lookup missed the pre-delete row")
   }
 
+  /** A BIGINT-keyed table of keys 1–40 in 8 buckets. Murmur3 hashes an
+    * INT and a BIGINT of one value differently, so each case below
+    * speaks INT keys to it.
+    */
+  private def bigintTable(tag: String): String = {
+    val path = graft.sources.Scratch.dir(tag)
+    VersionedLake.upsert(spark, path,
+      (1L to 40L).map(i => (i, s"a$i", i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq", numBuckets = 8)
+    path
+  }
+
+  test("readKeys with INT keys finds every row of a BIGINT-keyed table") {
+    val path = bigintTable("vlake_keytype_read")
+    val found = (1 to 40).count(i => VersionedLake.readKeys(spark, path,
+      Seq(i).toDF("k"), Seq("k")).count() == 1)
+    assert(found == 40, s"found $found of 40 keys")
+    val many = VersionedLake.readKeys(spark, path, (1 to 40).toDF("k"),
+      Seq("k")).select("k").as[Long].collect().sorted.toSeq
+    assert(many == (1L to 40L))
+  }
+
+  test("dvDelete with INT keys deletes the rows of a BIGINT-keyed table") {
+    val path = bigintTable("vlake_keytype_delete")
+    (1 to 12).foreach(i =>
+      VersionedLake.dvDelete(spark, path, Seq(i).toDF("k"), Seq("k")))
+    val live = VersionedLake.read(spark, path).select("k").as[Long]
+      .collect().sorted.toSeq
+    assert(live == (13L to 40L), s"live after deleting 1–12: $live")
+  }
+
+  test("upsert and dvUpsert of INT keys replace the rows of a BIGINT-keyed table") {
+    val path = bigintTable("vlake_keytype_upsert")
+    VersionedLake.upsert(spark, path,
+      (1 to 12).map(i => (i, s"b$i", 100L + i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq")
+    VersionedLake.dvUpsert(spark, path,
+      (13 to 24).map(i => (i, s"c$i", 100L + i)).toDF("k", "x", "seq"),
+      Seq("k"), "seq")
+    val rows = VersionedLake.read(spark, path).select("k", "x")
+      .as[(Long, String)].collect().toSeq
+    assert(rows.size == 40, s"${rows.size} live rows for 40 keys")
+    assert(rows.toMap == (1L to 40L).map(i => i ->
+      (if (i <= 12) s"b$i" else if (i <= 24) s"c$i" else s"a$i")).toMap)
+  }
+
+  test("a BIGINT key an INT-keyed table cannot hold matches no row") {
+    val path = graft.sources.Scratch.dir("vlake_keytype_range")
+    VersionedLake.upsert(spark, path,
+      (1 to 40).map(i => (i, s"a$i", i.toLong)).toDF("k", "x", "seq"),
+      Seq("k"), "seq", numBuckets = 8)
+    // 2^32 + 1 would read as key 1 if narrowed by wrap-around
+    val far = Seq(4294967297L, 7L).toDF("k")
+    assert(VersionedLake.readKeys(spark, path, far, Seq("k"))
+      .select("k").as[Int].collect().toSeq == Seq(7))
+    VersionedLake.dvDelete(spark, path, far, Seq("k"))
+    val live = VersionedLake.read(spark, path).select("k").as[Int]
+      .collect().sorted.toSeq
+    assert(live == (1 to 40).filter(_ != 7), s"live after delete: $live")
+  }
+
+  test("readKeys refuses a vacuumed or never-committed version") {
+    val path = bigintTable("vlake_pt_vacuumed")
+    VersionedLake.upsert(spark, path, Seq((1L, "b1", 50L))
+      .toDF("k", "x", "seq"), Seq("k"), "seq")
+    VersionedLake.vacuum(spark, path, retainLast = 1)
+    Seq(1, 7).foreach { v =>
+      val e = intercept[IllegalArgumentException] {
+        VersionedLake.readKeys(spark, path, Seq(1L).toDF("k"), Seq("k"),
+          asOfVersion = Some(v))
+      }
+      assert(e.getMessage.contains(s"version $v not in"), e.getMessage)
+    }
+  }
+
   test("version diff applied to v1 reproduces v2 exactly") {
     val diff = VersionedLake.versionDiff(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1),

@@ -14,8 +14,8 @@ if [ "${GRAFT_SKIP_COMPILE_GATE:-0}" = "1" ]; then
   exit 0
 fi
 
-# Only gate commits that touch compilable sources.
-if ! git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
+# Only gate commits that touch compilable sources or the benchmark.
+if ! git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/|^perfbench/'; then
   exit 0
 fi
 
@@ -30,9 +30,9 @@ echo "[compile-gate] OK"
 # The benchmark (perfbench/, its own sbt build over this one) calls the
 # engine's public API — GraftSession.local, Caching.releaseAll,
 # LakeWriter.read, Scd2Apply, EventStreams.streamingScd1, VersionedLake.
-# A change under src/main/ must keep it compiling too.
-if git diff --cached --name-only | grep -q '^src/main/'; then
-  echo "[compile-gate] staged src/main/ changes — compiling perfbench ..."
+# A change under src/main/ or perfbench/ must keep it compiling too.
+if git diff --cached --name-only | grep -qE '^(src/main|perfbench)/'; then
+  echo "[compile-gate] staged src/main/ or perfbench/ changes — compiling perfbench ..."
   if ! (cd perfbench && sbt --batch compile) > /tmp/graft_compile_gate_perfbench.log 2>&1; then
     tail -40 /tmp/graft_compile_gate_perfbench.log
     echo "[compile-gate] perfbench FAILED — commit refused. Full log: /tmp/graft_compile_gate_perfbench.log"
